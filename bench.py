@@ -53,91 +53,33 @@ def _cpu_share(t0: list[int] | None, t1: list[int] | None) -> dict | None:
 
 
 #: queries whose in-suite cost exceeds this get two extra warm re-runs
-#: (best recorded under ``slow_query_best_of_3``) plus a GEMM probe —
-#: round-9 adjudication: identical code swung 1-15x between runs on this
-#: VM, so a single sample can neither prove nor clear a regression
+#: (best recorded under ``slow_query_best_of_3``) — round-9 adjudication:
+#: identical code swung 1-15x between runs on this VM, so a single sample
+#: can neither prove nor clear a regression
 SLOW_RERUN_SEC = 3.0
 
 
-def _gemm_probe() -> float:
-    """Driver-side 512x512 float64 GEMM wall-clock with the process's
-    current BLAS threading — a host-contention canary recorded next to
-    each slow query's best-of-3, so a regression can't hide in (or be
-    invented by) host noise.  ~0.27 GFLOP: ~0.01 s on a quiet host,
-    10x+ that under the CPU-steal/oversubscription episodes rounds 5-9
-    kept adjudicating."""
-    import numpy as np
-
-    rng = np.random.default_rng(0)
-    a = rng.standard_normal((512, 512))
-    b = rng.standard_normal((512, 512))
-    t0 = time.perf_counter()
-    (a @ b).sum()
-    return round(time.perf_counter() - t0, 4)
-
-
-def _executor_probe(spark) -> float:
-    """EXECUTOR-side contention canary: one tiny Arrow-worker GEMM per
-    task across 8 tasks, end-to-end wall-clock.  The round-11 cbfops
-    adjudication found the gap this closes: the driver-side GEMM probe
-    stayed quiet (2-4 ms) through an episode that quadrupled an
-    Arrow-kernel query's warm best-of-3, because Python-worker stalls
-    are invisible to the driver process.  ~0.15-0.4 s on a quiet host
-    (mostly fixed job overhead); multi-second under worker-side
-    contention."""
-    import pandas as pd
-
-    def gemm(batches):
-        import numpy as np
-
-        rng = np.random.default_rng(0)
-        a = rng.standard_normal((256, 256))
-        for pdf in batches:
-            yield pd.DataFrame({"x": [float((a @ a).sum())] * len(pdf)})
-
-    t0 = time.perf_counter()
-    try:
-        spark.range(8, numPartitions=8).mapInPandas(
-            gemm, "x double"
-        ).count()
-    except Exception:
-        return -1.0
-    return round(time.perf_counter() - t0, 4)
-
-
-def _round_and_prior() -> tuple[Path, str, dict | None]:
-    """(repo_dir, round_number, prior official artifact) — the round is
-    inferred from BOTH artifact families (driver drops BENCH_r*.json, we
-    write BENCH_full_r*.json); the prior artifact feeds the contention
-    self-adjudication (round-11 verdict task 3)."""
+def _round() -> tuple[Path, str]:
+    """(repo_dir, round_number) — the round is inferred from BOTH artifact
+    families (driver drops BENCH_r*.json, we write BENCH_full_r*.json)
+    and names the BENCH_full_rNN.json this run writes."""
     here = Path(__file__).resolve().parent
     rnd = os.environ.get("SPARK_GRAFT_ROUND")
-    seen: list[tuple[int, Path]] = []
-    for pat in ("BENCH_r*.json", "BENCH_full_r*.json"):
-        for p in here.glob(pat):
-            s = p.stem.split("_r")[-1]
-            if s.isdigit():
-                seen.append((int(s), p))
     if rnd is None:
-        rnd = str(max((n for n, _ in seen), default=0) + 1)
-    prior = None
-    prior_full = [
-        (n, p)
-        for n, p in seen
-        if n < int(rnd) and p.name.startswith("BENCH_full_")
-    ]
-    if prior_full:
-        try:
-            prior = json.loads(max(prior_full)[1].read_text())
-        except Exception:
-            prior = None
-    return here, rnd, prior
+        seen = [
+            int(s)
+            for pat in ("BENCH_r*.json", "BENCH_full_r*.json")
+            for s in (p.stem.split("_r")[-1] for p in here.glob(pat))
+            if s.isdigit()
+        ]
+        rnd = str(max(seen, default=0) + 1)
+    return here, rnd
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
-    here, rnd, prior = _round_and_prior()
+    here, rnd = _round()
     spark = get_spark("cwi-spark-bench")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # model FITS are excluded: their reference analog is a training budget,
@@ -189,8 +131,6 @@ def main() -> None:
     warmups = bench_warmups()
     warmup_timings: dict[str, float] = {}
     slow_best_of_3: dict[str, float] = {}
-    gemm_probes: dict[str, float] = {}
-    exec_probes: dict[str, float] = {}
     t_reruns = 0.0
     t_all = time.perf_counter()
     ticks0 = _cpu_ticks()
@@ -223,9 +163,6 @@ def main() -> None:
             .count()
         )
         run_stream_once(warm_stream, name_prefix="bench_stream_warmup").count()
-        for t in spark.catalog.listTables():
-            if t.isTemporary and t.name.startswith("bench_stream_warmup"):
-                spark.catalog.dropTempView(t.name)
         warmup_timings["streaming"] = round(time.perf_counter() - t0, 4)
     except Exception as exc:
         errors["warmup:streaming"] = f"{type(exc).__name__}: {exc}"[:500]
@@ -255,18 +192,17 @@ def main() -> None:
         # slow-query pinning: re-run >SLOW_RERUN_SEC queries twice more
         # while the family's shared payloads are still warm.  The in-suite
         # number above stays the headline (wall-clock honesty); the WARM
-        # best-of-3 is the kernel cost to compare across rounds, and the
-        # probe timestamps host contention at that moment.  Re-run time is
-        # excluded from the suite total so `value` stays comparable with
-        # rounds 1-9.
+        # best-of-3 is the kernel cost to compare across rounds.  Re-run
+        # time is excluded from the suite total so `value` stays comparable
+        # with rounds 1-9.
         for name in fam_names:
             if timings.get(name, 0.0) <= SLOW_RERUN_SEC:
                 continue
             t_r = time.perf_counter()
             best = timings[name]
-            # streaming reruns register a fresh memory-sink temp view per
-            # run (run_stream_once uuid-names them) — snapshot and drop the
-            # delta so reruns don't accumulate driver-memory sinks
+            # stream_synthetic_counts registers a fresh memory-sink temp
+            # view per run (sources/pyds) — snapshot and drop the delta so
+            # reruns don't accumulate driver-memory sinks
             try:
                 views0 = {
                     t.name
@@ -299,73 +235,9 @@ def main() -> None:
             except Exception:
                 pass
             slow_best_of_3[name] = round(best, 4)
-            gemm_probes[name] = _gemm_probe()
-            exec_probes[name] = _executor_probe(spark)
             t_reruns += time.perf_counter() - t_r
         release_session_payloads(spark)
 
-    # contention self-adjudication (round-11 verdict task 3): a slow-query
-    # warm best-of-3 landing >2x its prior-official value WITH an elevated
-    # contention probe gets ONE end-of-suite re-queue (family payloads
-    # re-warmed, quiet-host retry); if the ratio persists the line is
-    # machine-stamped `contended` — the artifact adjudicates itself
-    # instead of needing COVERAGE.md prose (r10/r11 cbfops episodes).
-    recheck: dict[str, dict] = {}
-    if slow_best_of_3 and prior:
-        import statistics
-
-        t_r = time.perf_counter()
-        prior_best = prior.get("slow_query_best_of_3", {})
-        prior_t = prior.get("queries", {})
-        gmed = statistics.median(gemm_probes.values())
-        epos = [v for v in exec_probes.values() if v > 0]
-        emed = statistics.median(epos) if epos else 0.0
-        for name, best in list(slow_best_of_3.items()):
-            ref = prior_best.get(name, prior_t.get(name))
-            if not ref or best <= 2.0 * ref:
-                continue
-            elevated = gemm_probes.get(name, 0.0) > 2.0 * gmed or (
-                emed > 0 and exec_probes.get(name, 0.0) > 2.0 * emed
-            )
-            if not elevated:
-                continue  # probes quiet -> likely real regression; leave it
-            fam = families.get(name, "misc")
-            for wkey in [
-                k for k in warmups if k == fam or k.startswith(f"{fam}/")
-            ]:
-                try:
-                    warmups[wkey](spark, sf_dir)
-                except Exception:
-                    pass
-            rbest: float | None = None
-            for _ in range(2):
-                t0 = time.perf_counter()
-                try:
-                    queries[name](spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    dt = time.perf_counter() - t0
-                    rbest = dt if rbest is None else min(rbest, dt)
-                except Exception as exc:
-                    errors[f"recheck:{name}"] = (
-                        f"{type(exc).__name__}: {exc}"[:500]
-                    )
-                    break
-            entry = {
-                "prior_best": ref,
-                "suite_best": best,
-                "requeued_best": round(rbest, 4) if rbest is not None else None,
-                "gemm_probe": _gemm_probe(),
-                "executor_probe": _executor_probe(spark),
-            }
-            if rbest is not None and rbest < best:
-                slow_best_of_3[name] = round(rbest, 4)
-            entry["contended"] = bool(
-                rbest is None or min(best, rbest) > 2.0 * ref
-            )
-            recheck[name] = entry
-            release_session_payloads(spark)
-        t_reruns += time.perf_counter() - t_r
     total = round(time.perf_counter() - t_all - t_reruns, 4)
     cpu = _cpu_share(ticks0, _cpu_ticks())
 
@@ -381,8 +253,6 @@ def main() -> None:
         extras["family_warmup"] = warmup_timings
     if slow_best_of_3:
         extras["slow_query_best_of_3"] = slow_best_of_3
-        extras["slow_query_gemm_probe"] = gemm_probes
-        extras["slow_query_executor_probe"] = exec_probes
         extras["slow_query_rerun_sec"] = round(t_reruns, 4)
     if errors:
         extras["errors"] = errors
@@ -418,40 +288,6 @@ def main() -> None:
                 extras["eval_users_per_sec_in_suite"] = round(
                     n_users / in_suite, 1
                 )
-            # eval-probe self-adjudication (round-12 verdict task 2): the
-            # slow-query recheck above never watched the eval best-of-3
-            # itself, and that is exactly where r12's one anomaly landed
-            # (official 923 u/s vs 1321.7 quiet on identical code).  Same
-            # rule at a tighter ratio — the eval line is the baseline
-            # comparable, so a best-of-3 landing >1.2x the prior official
-            # artifact's eval_sec_best_of_3 gets ONE end-of-suite re-queue
-            # (payloads released, two more warm runs); if the ratio
-            # persists, the entry is machine-stamped `contended` and the
-            # headline's contended list carries it — no prose adjudication.
-            prior_eval = (prior or {}).get("eval_sec_best_of_3")
-            if prior_eval and eval_sec > 1.2 * prior_eval:
-                release_session_payloads(spark)
-                rbest: float | None = None
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    queries["toppop_eval_metrics"](spark, sf_dir).write.format(
-                        "noop"
-                    ).mode("overwrite").save()
-                    dt = time.perf_counter() - t0
-                    rbest = dt if rbest is None else min(rbest, dt)
-                entry = {
-                    "prior_best": prior_eval,
-                    "suite_best": round(eval_sec, 4),
-                    "requeued_best": round(rbest, 4),
-                    "gemm_probe": _gemm_probe(),
-                    "executor_probe": _executor_probe(spark),
-                }
-                if rbest < eval_sec:
-                    eval_sec = rbest
-                    extras["eval_users_per_sec"] = round(n_users / eval_sec, 1)
-                    extras["eval_sec_best_of_3"] = round(eval_sec, 4)
-                entry["contended"] = bool(eval_sec > 1.2 * prior_eval)
-                extras["eval_recheck"] = entry
         except Exception as exc:
             errors["eval_users_per_sec"] = f"{type(exc).__name__}: {exc}"[:500]
             extras["errors"] = errors
@@ -461,28 +297,18 @@ def main() -> None:
     # failures (rerun:*) don't invalidate the suite — the in-suite
     # workload completed; only the warm best-of-3 for that query is
     # unverified (and its error line says so).
-    valid = not any(
-        not k.startswith(("rerun:", "recheck:")) for k in errors
-    )
-    if recheck:
-        extras["contention_recheck"] = recheck
+    valid = not any(not k.startswith("rerun:") for k in errors)
     # compact headline, duplicated at BOTH ends of the stdout stream: the
     # driver's capture keeps only ~2000 chars of the output (BENCH_r11's
     # `tail` parsed to null), so the first printed line AND the final key
     # of the big JSON line each carry total/n/eval-throughput/validity —
     # whichever window the capture keeps, the headline survives.
-    contended_names = sorted(
-        n for n, e in recheck.items() if e.get("contended")
-    )
-    if extras.get("eval_recheck", {}).get("contended"):
-        contended_names.append("eval_sec_best_of_3")
     headline = {
         "total_sec": total if valid else round(sum(timings.values()), 4),
         "n_queries": len(timings),
         "sf": sf,
         "valid": valid,
         "eval_users_per_sec": extras.get("eval_users_per_sec"),
-        "contended": contended_names,
         "n_errors": len(errors),
     }
     result = {
@@ -497,10 +323,10 @@ def main() -> None:
     }
     # durability: the driver keeps only a window of the stdout line, so
     # rounds 1-2 lost most per-query history — persist the full dict
-    # in-repo too (round + prior inferred once in _round_and_prior,
-    # overridable via SPARK_GRAFT_ROUND).  Persist BEFORE printing: a
-    # consumer that closes the pipe after the first line (head -1)
-    # SIGPIPEs the process mid-print, and the artifact must survive that.
+    # in-repo too (round inferred once in _round, overridable via
+    # SPARK_GRAFT_ROUND).  Persist BEFORE printing: a consumer that closes
+    # the pipe after the first line (head -1) SIGPIPEs the process
+    # mid-print, and the artifact must survive that.
     try:
         out = here / f"BENCH_full_r{int(rnd):02d}.json"
         out.write_text(json.dumps(result, indent=1) + "\n")

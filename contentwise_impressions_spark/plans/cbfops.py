@@ -149,7 +149,7 @@ def bench_warmup(spark: SparkSession, sf_dir: str) -> None:
     #
     # r17: the probe ALSO pre-faults each worker's kernel buffer working
     # set inside the retained allocator arena
-    # (operators/blocked_topk._ALLOC_MODE / blasctl.retain_task_buffers):
+    # (operators/blocked_topk._alloc_mode_for / blasctl.retain_task_buffers):
     # the r17 phase log showed the first timed kernel run paying 231 s of
     # in-task numpy time vs 31 s warm at sf0.1 — fresh-page faults on the
     # ~80 MB/task full-matrix buffers, concurrent across 32 workers and
@@ -163,26 +163,22 @@ def bench_warmup(spark: SparkSession, sf_dir: str) -> None:
     sc = spark.sparkContext
     n_slots = max(sc.defaultParallelism, 1)
     blk = -(-int(n_items) // _bt._grid_blocks(int(n_items), n_slots))
-    alloc = _bt._ALLOC_MODE
-    if alloc == "auto":
-        alloc = _bt._alloc_mode_for(blk)
+    alloc = _bt._alloc_mode_for(blk)
 
     def _touch(batches):
         import numpy as np
         import pandas as pd
 
         s = sum(int(b.value[0][0]) for b in bcs)
-        if alloc is not None:
-            _retain(*alloc)
-            # fault the per-task full-matrix working set once (kernel
-            # tasks hold ~5 blk×blk float64 buffers at peak); the pages
-            # stay arena-resident for every later kernel task on this
-            # worker
-            ws = [np.empty((blk, blk)) for _ in range(5)]
-            for a in ws:
-                a.fill(0.0)
-            s += int(ws[0][0, 0])
-            del ws
+        _retain(*alloc)
+        # fault the per-task full-matrix working set once (kernel tasks
+        # hold ~5 blk×blk float64 buffers at peak); the pages stay
+        # arena-resident for every later kernel task on this worker
+        ws = [np.empty((blk, blk)) for _ in range(5)]
+        for a in ws:
+            a.fill(0.0)
+        s += int(ws[0][0, 0])
+        del ws
         for _ in batches:
             yield pd.DataFrame({"v": [s]})
 

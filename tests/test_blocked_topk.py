@@ -143,17 +143,104 @@ def test_tie_heavy_topk_matches_naive(spark):
     got = _collected(blocked_cosine_topk(feat=feat, k=4, block_rows=16))
     assert got == _naive_hybrid(feat_rows, [], 1.0, 4)
 
-    # the lexsort reference path (also the |sim|-overflow fallback) must
-    # emit the identical rows
-    import contentwise_impressions_spark.operators.blocked_topk as bt
 
-    assert bt._EMIT_MODE == "fast"
-    try:
-        bt._EMIT_MODE = "lexsort"
-        ref = _collected(blocked_cosine_topk(feat=feat, k=4, block_rows=16))
-    finally:
-        bt._EMIT_MODE = "fast"
-    assert ref == got
+def _rint(sims, scale):
+    """The kernel's half-up rounded integer form of a sims block."""
+    r = np.floor(np.abs(sims) * scale + 0.5)
+    return np.copysign(r, sims)
+
+
+def _naive_select(rint, sims, p_ids, i_ids, mirror, k, scale):
+    """Per-row top-k by (rounded desc, id asc), self-pairs excluded."""
+    out = []
+    for rnd, sms, rows, cols in [(rint, sims, p_ids, i_ids)] + (
+        [(rint.T, sims.T, i_ids, p_ids)] if mirror else []
+    ):
+        for r, row_id in enumerate(rows):
+            cand = [c for c in range(len(cols)) if cols[c] != row_id]
+            cand.sort(key=lambda c: (-rnd[r, c], cols[c]))
+            out += [
+                (int(cols[c]), int(row_id), float(sms[r, c]),
+                 float(rnd[r, c]) / scale)
+                for c in cand[:k]
+            ]
+    return sorted(out)
+
+
+def _rows(pdf):
+    cols = ["item_i", "item_j", "sim", "rsim"]
+    rows = sorted(map(tuple, pdf[cols].itertuples(index=False)))
+    return [(int(i), int(j), float(s), float(r)) for i, j, s, r in rows]
+
+
+def _sign_bits(pdf):
+    pdf = pdf.sort_values(["item_j", "item_i"])
+    return np.signbit(pdf["rsim"].to_numpy()).tolist()
+
+
+@pytest.mark.parametrize("diagonal", [False, True])
+def test_fast_selection_matches_lexsort_on_ties(diagonal):
+    # the composite-key selection and the lexsort reference (also the
+    # |sim|-overflow fallback) on a tie-heavy block: few distinct values,
+    # k cutting inside the tie groups, unsorted ids, and ±tiny sims that
+    # round to a signed zero.  Off-diagonal blocks emit both
+    # orientations; a diagonal block masks its self-pairs.
+    from contentwise_impressions_spark.operators.blocked_topk import (
+        _key_base,
+        _key_overflows,
+        _select_lexsort,
+        _select_topk,
+    )
+
+    rng = np.random.default_rng(7)
+    levels = [0.5, 0.25, 1e-12, -1e-12, -0.25]
+    weights = [0.05, 0.05, 0.35, 0.35, 0.2]
+    n_p, n_i, k, scale = 23, 23 if diagonal else 31, 4, 1e9
+    p_ids = rng.permutation(np.arange(100, 100 + 3 * n_p, 3))
+    i_ids = p_ids if diagonal else rng.permutation(np.arange(500, 500 + n_i))
+    sims = rng.choice(levels, size=(n_p, n_i), p=weights)
+    if diagonal:
+        sims = np.triu(sims) + np.triu(sims, 1).T  # symmetric block
+    rint = _rint(sims, scale)
+    assert not _key_overflows(rint, _key_base(n_p, n_i))
+    mirror = not diagonal
+    fast = _select_topk(
+        rint.copy(), sims, p_ids, i_ids, diagonal, mirror, k, scale
+    )
+    ref = _select_lexsort(rint.copy(), sims, p_ids, i_ids, mirror, k, scale)
+    assert _rows(fast) == _rows(ref)
+    assert _rows(fast) == _naive_select(
+        rint, sims, p_ids, i_ids, mirror, k, scale
+    )
+    assert _sign_bits(fast) == _sign_bits(ref)
+    assert len(fast) == (n_p + (n_i if mirror else 0)) * k
+
+
+def test_key_overflow_falls_back_to_lexsort():
+    # |sim| ~ 1e7 at round_digits=9 puts rint·K past 2^53: the magnitude
+    # guard alone must route the block to the lexsort selection, whose
+    # rows are still the exact (rounded desc, id asc) top-k
+    from contentwise_impressions_spark.operators.blocked_topk import (
+        _key_base,
+        _key_overflows,
+        _select_lexsort,
+        _select_topk,
+    )
+
+    rng = np.random.default_rng(11)
+    n_p, n_i, k, scale = 9, 14, 3, 1e9
+    p_ids = rng.permutation(np.arange(n_p)) + 1000
+    i_ids = rng.permutation(np.arange(n_i)) + 2000
+    sims = rng.choice([3e7, 1e7, 1e7, -2e7], size=(n_p, n_i))
+    rint = _rint(sims, scale)
+    assert _key_overflows(rint, _key_base(n_p, n_i))
+    got = _select_topk(rint.copy(), sims, p_ids, i_ids, False, True, k, scale)
+    assert _rows(got) == _rows(
+        _select_lexsort(rint.copy(), sims, p_ids, i_ids, True, k, scale)
+    )
+    assert _rows(got) == _naive_select(
+        rint, sims, p_ids, i_ids, True, k, scale
+    )
 
 
 def test_broadcast_path_matches_fallback(tiny):
@@ -212,27 +299,6 @@ def test_merge_exchange_width_is_data_derived(tiny, spark):
     )
     assert "hashpartitioning(item_j" in bplan
     assert "REPARTITION_BY_NUM" in bplan
-
-
-def test_alloc_retention_off_matches_on(tiny):
-    # r17: worker allocator retention (mallopt trim/mmap thresholds) is a
-    # memory-placement knob only — results are identical with it disabled
-    from contentwise_impressions_spark.operators import blocked_topk as bt
-
-    feat_rows, adj_rows, feat, adj = tiny
-    prev = bt._ALLOC_MODE
-    try:
-        bt._ALLOC_MODE = None
-        off = _collected(
-            blocked_cosine_topk(feat=feat, adj=adj, k=3, icm_weight=0.5)
-        )
-        bt._ALLOC_MODE = "auto"
-        on = _collected(
-            blocked_cosine_topk(feat=feat, adj=adj, k=3, icm_weight=0.5)
-        )
-    finally:
-        bt._ALLOC_MODE = prev
-    assert off == on == _naive_hybrid(feat_rows, adj_rows, 0.5, 3)
 
 
 def test_alloc_mode_geometry():

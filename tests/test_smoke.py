@@ -5,13 +5,36 @@ from __future__ import annotations
 import importlib.util
 from pathlib import Path
 
+import pytest
 
-def _load_entry():
-    path = Path(__file__).resolve().parent.parent / "__spark_entry__.py"
-    spec = importlib.util.spec_from_file_location("spark_entry", path)
+ROOT = Path(__file__).resolve().parent.parent
+
+
+def _load(path: Path, name: str):
+    spec = importlib.util.spec_from_file_location(name, path)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
+
+
+def _load_entry():
+    return _load(ROOT / "__spark_entry__.py", "spark_entry")
+
+
+@pytest.mark.parametrize(
+    "script",
+    [
+        "bench.py",
+        "tools_bench_scale.py",
+        "tools_dump_plans.py",
+        "tools_gen_sf1.py",
+    ],
+)
+def test_top_level_script_imports(script):
+    # loading runs every module-level import (tools_bench_scale pulls
+    # helpers out of bench) without running main
+    mod = _load(ROOT / script, f"script_{Path(script).stem}")
+    assert callable(mod.main)
 
 
 def test_entry_returns_rows(spark):

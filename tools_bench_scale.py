@@ -3,8 +3,9 @@ sf0.1 vs a 10x scale-up (/tmp/sf1, from tools_gen_sf1.py).
 
 For each measured query we record the FIRST run (includes the family's
 shared-payload build) and a WARM re-run (the kernel cost — the number the
-noise protocol says to compare), at both scales, plus a GEMM probe per
-measurement so host contention is visible in the artifact.
+noise protocol says to compare), at both scales, plus the run's host CPU
+steal/busy share (``host_cpu``) so host contention is visible in the
+artifact.
 
 ANN is measured twice: with the registered fixed parameters (n_list=8 —
 candidate pair support grows ~(N/n_list)^2 * n_list = N^2/n_list, the
@@ -25,7 +26,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from bench import _cpu_share, _cpu_ticks, _gemm_probe  # noqa: E402
+from bench import _cpu_share, _cpu_ticks  # noqa: E402
 from contentwise_impressions_spark.plans import all_queries  # noqa: E402
 from contentwise_impressions_spark.plans.shared import (  # noqa: E402
     release_session_payloads,
@@ -542,7 +543,6 @@ def main() -> None:
                         f"{type(exc).__name__}: {exc}"[:200]
                     )
                     break
-            ent[f"{sf_label}_gemm_probe"] = _gemm_probe()
         # recall columns for the fixed-shape EXACTNESS ANCHORS (r15
         # verdict task 8): the flat n²-by-design rows exist to anchor
         # correctness, and these columns document what recall the
@@ -610,7 +610,6 @@ def main() -> None:
                 ent[f"{sf_label}_{k2}"] = v
         except Exception as exc:
             ent[f"{sf_label}_error"] = f"{type(exc).__name__}: {exc}"[:200]
-        ent[f"{sf_label}_gemm_probe"] = _gemm_probe()
         # refine stage split + recall columns (r12 verdict task 5)
         ent = rows.setdefault("ann_refine_split", {"family": "ann"})
         try:
@@ -618,7 +617,6 @@ def main() -> None:
                 ent[f"{sf_label}_{k2}"] = v
         except Exception as exc:
             ent[f"{sf_label}_error"] = f"{type(exc).__name__}: {exc}"[:200]
-        ent[f"{sf_label}_gemm_probe"] = _gemm_probe()
         if sf_label == "sf0.1":
             n01 = (
                 load_table(spark, sf_dir, "events")
@@ -659,7 +657,6 @@ def main() -> None:
                     ent[f"{sf_label}_state_frac"] = (
                         round(state_rows / n_events, 4) if n_events else None
                     )
-                ent[f"{sf_label}_gemm_probe"] = _gemm_probe()
         finally:
             shutil.rmtree(src_dir, ignore_errors=True)
         release_session_payloads(spark)
