@@ -48,6 +48,7 @@ except Exception:  # pragma: no cover
     pass
 
 from ..functions.blasctl import limit_blas_threads  # noqa: E402
+from .. import sizing  # noqa: E402
 
 #: deterministic pseudo-random hyperplanes: component (plane j, dim p) =
 #: ((p·PLANE_A + j·PLANE_B) mod PLANE_P) / PLANE_P − 0.5
@@ -174,10 +175,28 @@ def _topk_task(probes: pd.DataFrame, index: pd.DataFrame, k: int) -> pd.DataFram
     )
 
 
-#: target partial rows per merge reducer — quiet-host A/B at sf0.1 put the
-#: optimum near 25-30k rows/task (100k-row merge: 1.15 s at the 64-part
-#: session default, 0.29 s at 4 parts; 60k rows: 2.16 s -> 0.87 s at 2)
-_MERGE_ROWS_PER_PART = 1 << 15
+def _list_sizes(lists: DataFrame) -> tuple[int, int, int, int]:
+    """(lists, largest list, total rows, Σ list²) of a frame with a
+    ``list_id`` column — one scalar aggregate (a single-row collect).
+    Σ list² is the score-cell count of a home-list search, the work
+    `sizing` widths its grid by."""
+    row = (
+        lists.groupBy("list_id")
+        .count()
+        .agg(
+            F.count(F.lit(1)).alias("l"),
+            F.max("count").alias("m"),
+            F.sum("count").alias("n"),
+            F.sum(F.col("count") * F.col("count")).alias("n2"),
+        )
+        .collect()[0]
+    )
+    return (
+        int(row["l"]),
+        int(row["m"] or 1),
+        int(row["n"] or 0),
+        int(row["n2"] or 0),
+    )
 
 
 def _merge_topk(
@@ -195,13 +214,14 @@ def _merge_topk(
     is AQE-exempt and already satisfies the window's required
     distribution — exactly one Exchange either way, only its width
     changes, and the window result does not depend on physical
-    partitioning, so emitted rows are identical.  Scale-adaptive: the
-    width grows linearly with the estimate, never from a host constant;
-    ``None`` keeps the session default (callers with no cheap estimate).
+    partitioning, so emitted rows are identical.  Width: rows per task
+    (sizing.width_for_rows); ``None`` keeps the session default (callers
+    with no cheap estimate).
     """
     if est_rows is not None and est_rows > 0:
-        n_parts = max(2, -(-int(est_rows) // _MERGE_ROWS_PER_PART))
-        partials = partials.repartition(n_parts, "vec_id")
+        partials = partials.repartition(
+            sizing.width_for_rows(est_rows), "vec_id"
+        )
     w = Window.partitionBy("vec_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
@@ -241,16 +261,27 @@ def _hash_blocks(
         return p, p.count()
 
     payload, n = _cached(spark, key and ("emb", key), build)
-    par = spark.sparkContext.defaultParallelism
-    if min_blocks is None:
-        # n_blk² tasks ≈ 3× core count — over-decomposition beats an
-        # exact-fit grid whose last wave straggles (see blocked_topk)
-        min_blocks = max(2, int(math.ceil(math.sqrt(3.0 * par))))
-    n_blk = max(min_blocks, int(math.ceil(n / float(block_rows))))
-    idx = payload.withColumn("_side", F.lit(0)).withColumn(
+    both, n_blk = _square_grid(payload, payload, n, block_rows, min_blocks)
+    return both, n, n_blk
+
+
+def _square_grid(
+    ip: DataFrame,
+    qp: DataFrame,
+    n: int,
+    block_rows: int,
+    min_blocks: int | None,
+) -> tuple[DataFrame, int]:
+    """Index rows ``ip`` hash into index blocks and replicate across probe
+    blocks, probe rows ``qp`` vice versa — an n_blk × n_blk grid over the
+    ``n``-row index side, sized by `sizing` — repartitioned on the task
+    keys.  Returns ``(both, n_blk)``."""
+    c = sizing.cores(ip.sparkSession)
+    n_blk = sizing.grid_blocks(n, c, block_rows, min_blocks)
+    idx = ip.withColumn("_side", F.lit(0)).withColumn(
         "iblk", F.pmod(F.xxhash64("vec_id"), F.lit(n_blk)).cast("int")
     ).withColumn("pblk", F.explode(F.sequence(F.lit(0), F.lit(n_blk - 1))))
-    prb = payload.withColumn("_side", F.lit(1)).withColumn(
+    prb = qp.withColumn("_side", F.lit(1)).withColumn(
         "pblk", F.pmod(F.xxhash64("vec_id"), F.lit(n_blk)).cast("int")
     ).withColumn("iblk", F.explode(F.sequence(F.lit(0), F.lit(n_blk - 1))))
     # explicit task-count repartition on the group keys (r16): the block
@@ -258,12 +289,11 @@ def _hash_blocks(
     # coalescing (session parallelismFirst=false) would fold them onto a
     # few cores; a user-specified hash repartition is exempt and already
     # satisfies the downstream applyInPandas' ClusteredDistribution
-    # (same rule as blocked_topk / the ADC grids)
-    n_tasks = min(n_blk * n_blk, max(256, 8 * par))
+    n_tasks = sizing.kernel_tasks(c, n_blk * n_blk, n * n)
     both = idx.unionByName(prb.select(idx.columns)).repartition(
         n_tasks, "pblk", "iblk"
     )
-    return both, n, n_blk
+    return both, n_blk
 
 
 def cosine_topk_bruteforce(
@@ -358,7 +388,7 @@ def _cross_blocks(
     ones get MEMORY_ONLY (nothing ever releases them, so they must be
     self-evicting with no disk blocks).  Block count sized by the big
     (corpus) side; query rows replicate across index blocks and vice
-    versa, tagged union → one groupBy (see _hash_blocks).  Returns
+    versa, tagged union → one groupBy (see _square_grid).  Returns
     ``(both, n_corpus, n_blk)`` — sizing facts for the merge exchange."""
     from pyspark import StorageLevel
 
@@ -376,21 +406,8 @@ def _cross_blocks(
         return p, p.count()
 
     cp, n = _cached(spark, corpus_cache_key, build)
-    par = spark.sparkContext.defaultParallelism
-    if min_blocks is None:
-        min_blocks = max(2, int(math.ceil(math.sqrt(3.0 * par))))
-    n_blk = max(min_blocks, int(math.ceil(n / float(block_rows))))
-    idx = cp.withColumn("_side", F.lit(0)).withColumn(
-        "iblk", F.pmod(F.xxhash64("vec_id"), F.lit(n_blk)).cast("int")
-    ).withColumn("pblk", F.explode(F.sequence(F.lit(0), F.lit(n_blk - 1))))
-    prb = qp.withColumn("_side", F.lit(1)).withColumn(
-        "pblk", F.pmod(F.xxhash64("vec_id"), F.lit(n_blk)).cast("int")
-    ).withColumn("iblk", F.explode(F.sequence(F.lit(0), F.lit(n_blk - 1))))
-    # explicit task-count repartition — see _hash_blocks
-    n_tasks = min(n_blk * n_blk, max(256, 8 * par))
-    both = idx.unionByName(prb.select(idx.columns)).repartition(
-        n_tasks, "pblk", "iblk"
-    )
+    # the corpus count stands in for the uncounted query side
+    both, n_blk = _square_grid(cp, qp, n, block_rows, min_blocks)
     return both, n, n_blk
 
 
@@ -788,14 +805,7 @@ def ivf_topk(
     home = pl.filter(F.col("probe_rank") == 1).select("vec_id", "list_id")
     # sub-block the largest list so a hot cluster cannot make one task
     # unbounded; probes replicate across a list's sub-blocks
-    mx_row = (
-        home.groupBy("list_id")
-        .count()
-        .agg(F.max("count").alias("m"), F.sum("count").alias("n"))
-        .collect()
-    )
-    mx = int(mx_row[0]["m"] or 1)
-    n_vec = int(mx_row[0]["n"] or 0)
+    n_lists, mx, n_vec, n_pairs = _list_sizes(home)
     n_sub = max(1, int(math.ceil(mx / float(block_rows))))
     idx = (
         payload.join(home, "vec_id")
@@ -812,10 +822,16 @@ def ivf_topk(
     def split_task(pdf: pd.DataFrame) -> pd.DataFrame:
         return _topk_task(pdf[pdf["_side"] == 1], pdf[pdf["_side"] == 0], kk)
 
-    # explicit task-count repartition — see _hash_blocks (AQE-exempt,
-    # keeps the GEMM tasks spread under size-based coalescing)
+    # explicit task-count repartition — AQE-exempt, keeps the GEMM tasks
+    # spread under size-based coalescing (see _square_grid); each probe
+    # scores its n_probe lists' candidates
+    n_tasks = sizing.kernel_tasks(
+        sizing.cores(embeddings.sparkSession),
+        n_lists * n_sub,
+        n_probe * n_pairs,
+    )
     partials = both.repartition(
-        max(n_list * n_sub, 32), "list_id", "sub"
+        n_tasks, "list_id", "sub"
     ).groupby("list_id", "sub").applyInPandas(
         split_task, _TOPK_PARTIAL
     )
@@ -971,15 +987,12 @@ def semantic_dedup(
         )
         # hot-cluster sub-block sizing (same trick as ivf_topk): one
         # scalar aggregate over the persisted payload
-        mx_row = (
-            p.groupBy("list_id")
-            .count()
-            .agg(F.max("count").alias("m"))
-            .collect()
-        )
-        return p, int(mx_row[0]["m"] or 1)
+        n_lists, mx, _, n_pairs = _list_sizes(p)
+        return p, n_lists, mx, n_pairs
 
-    payload, mx = _cached(spark, cache_key and ("semd", cache_key), build)
+    payload, n_lists, mx, n_pairs = _cached(
+        spark, cache_key and ("semd", cache_key), build
+    )
     n_sub = max(1, int(math.ceil(mx / float(block_rows))))
 
     idx = (
@@ -1029,11 +1042,13 @@ def semantic_dedup(
             }
         )
 
-    # explicit task-count repartition — see _hash_blocks (AQE-exempt,
-    # keeps the GEMM tasks spread under size-based coalescing)
-    par = spark.sparkContext.defaultParallelism
+    # explicit task-count repartition — AQE-exempt, keeps the GEMM tasks
+    # spread under size-based coalescing (see _square_grid)
+    n_tasks = sizing.kernel_tasks(
+        sizing.cores(spark), n_lists * n_sub * n_sub, n_pairs
+    )
     partials = both.repartition(
-        max(n_list * n_sub * n_sub, 2 * par), "list_id", "psub", "isub"
+        n_tasks, "list_id", "psub", "isub"
     ).groupby("list_id", "psub", "isub").applyInPandas(
         task, _SEMDEDUP_OUT
     )

@@ -59,14 +59,14 @@ cached copy per payload config per session replaces the former
 one-persist-per-invocation accumulation.
 
 Scaling knobs: block_rows bounds per-task memory (dense block =
-block_rows × n_features doubles); B grows with n so per-task work is
-constant.  Shuffle volume is n·B payload rows + n·B·k partials — linear
-in n for fixed blocking, vs the self-join's Σ df².
+block_rows × n_features doubles); B and the task count come from the
+grid's work (contentwise_impressions_spark/sizing.py).  Shuffle volume
+is n·B payload rows + n·B·k partials — linear in n for fixed blocking,
+vs the self-join's Σ df².
 """
 
 from __future__ import annotations
 
-import math
 import sys
 from typing import Callable
 
@@ -91,6 +91,7 @@ except Exception:  # pragma: no cover
 
 from ..functions.blasctl import limit_blas_threads  # noqa: E402
 from ..functions.blasctl import retain_task_buffers  # noqa: E402
+from .. import sizing  # noqa: E402
 
 _OUT = StructType(
     [
@@ -117,14 +118,10 @@ _CACHE: dict[tuple, object] = {}
 def _grid_blocks(
     n: int, par: int, block_rows: int = 4096, min_blocks: int | None = None
 ) -> int:
-    """Block count of the triangular grid for n rows (the same formula
-    ``blocked_cosine_topk`` uses — exported so the family warmup can
-    pre-fault buffers of the exact per-task shape)."""
-    if min_blocks is None:
-        min_blocks = max(
-            2, int(math.ceil((math.sqrt(1.0 + 24.0 * par) - 1.0) / 2.0))
-        )
-    return max(min_blocks, int(math.ceil(n / float(block_rows))))
+    """Block count of the triangular grid for n rows on ``par`` task
+    slots (the call ``blocked_cosine_topk`` makes — exported so the
+    family warmup can pre-fault buffers of the exact per-task shape)."""
+    return sizing.grid_blocks(n, par, block_rows, min_blocks, triangular=True)
 
 
 def _alloc_mode_for(block_size: int) -> tuple[int, int]:
@@ -604,13 +601,9 @@ def blocked_cosine_topk(
     bcast, payload, n, n_feats = prepare_kernel_payloads(
         feat, adj, feat_key, adj_key, feat_broadcast_mb
     )
-    spark = payload.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    # triangular grid: n_blk·(n_blk+1)/2 tasks ≈ 3× the core count —
-    # over-decomposition keeps every core busy through the last wave
-    # (measured 2.5× faster than an exact-fit grid, whose final
-    # partial wave straggles); block_rows stays the per-task MEMORY
-    # cap and binds only at larger n
+    par = sizing.cores(payload.sparkSession)
+    # triangular grid sized by its work (sizing.grid_blocks); block_rows
+    # stays the per-task MEMORY cap and binds only at larger n
     n_blk = _grid_blocks(n, par, block_rows, min_blocks)
 
     # symmetric kernel → lower-triangular block grid only: a row with home
@@ -788,9 +781,13 @@ def blocked_cosine_topk(
     # user-specified hash repartition is exempt from AQE coalescing and
     # already satisfies applyInPandas' ClusteredDistribution, so no second
     # exchange is inserted.
-    # one group per partition up to a cap: past it partitions process a
-    # few groups sequentially (per-group memory is bounded either way)
-    n_tasks = min(n_blk * (n_blk + 1) // 2, max(256, 8 * par))
+    # partitions past the task count process a few groups sequentially
+    # (per-group memory is bounded either way)
+    n_tasks = sizing.kernel_tasks(
+        par,
+        sizing.grid_groups(n_blk, triangular=True),
+        sizing.grid_groups(n, triangular=True),
+    )
     partials = (
         both.repartition(n_tasks, "pblk", "iblk")
         .groupby("pblk", "iblk")
@@ -804,9 +801,7 @@ def blocked_cosine_topk(
     # User repartition on the window key: AQE-exempt, satisfies the
     # window's distribution (one Exchange either way), result rows
     # independent of physical partitioning.
-    from .ann import _MERGE_ROWS_PER_PART
-
-    merge_parts = max(2, -(-(n * n_blk * int(k)) // _MERGE_ROWS_PER_PART))
+    merge_parts = sizing.width_for_rows(n * n_blk * int(k))
     # rank on the task-emitted rounded value — identical doubles to the
     # task-side ranking, so no cross-stage rounding-convention divergence
     w = Window.partitionBy("item_j").orderBy(

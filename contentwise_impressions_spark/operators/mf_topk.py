@@ -67,6 +67,7 @@ except Exception:  # pragma: no cover
     pass
 
 from ..functions.blasctl import limit_blas_threads  # noqa: E402
+from .. import sizing  # noqa: E402
 
 #: per-session bounded registry of live item-factor broadcasts / persisted
 #: factor frames: repeated serving calls (e.g. the quality-gate plan serving
@@ -316,11 +317,12 @@ def _blocked_gemm(
     """UB×IB grid of bounded GEMM tasks (the any-scale path): users are
     shipped IB times, items UB times, each task holds one user block + one
     item block and emits per-user partial top-_m for its item block."""
-    spark = uf.sparkSession
-    par = spark.sparkContext.defaultParallelism
+    c = sizing.cores(uf.sparkSession)
     n_ib = max(1, int(math.ceil(n_items / float(item_block_rows))))
-    # enough user blocks that the grid over-decomposes the cores ~3×
-    n_ub = max(1, int(math.ceil(3.0 * par / n_ib)))
+    # user blocks from the grid's work (sizing.kernel_tasks); the catalog
+    # count stands in for the uncounted user side
+    work = n_items * n_items
+    n_ub = max(1, -(-sizing.kernel_tasks(c, n_items * n_ib, work) // n_ib))
     u_side = uf.select(
         F.lit(1).alias("_side"),
         F.col("user_id").alias("fid"),
@@ -370,7 +372,7 @@ def _blocked_gemm(
 
     # explicit grid-task repartition: AQE would coalesce the shuffle-tiny
     # but compute-heavy tasks onto a handful of cores (see blocked_topk)
-    n_tasks = min(n_ub * n_ib, max(256, 8 * par))
+    n_tasks = sizing.kernel_tasks(c, n_ub * n_ib, work)
     return (
         both.repartition(n_tasks, "_ub", "_ib")
         .groupby("_ub", "_ib")

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import sizing
+
 #: modulus and affine constants for the MinHash family (shared with the
 #: oracle-SQL generators in plans/dedupops.py)
 MINHASH_P = 2_147_483_647
@@ -183,7 +185,9 @@ def distributed_ordered_ids(
     preserved while the sort scales with the cluster.
     """
     spark = values.sparkSession
-    n_part = max(2, spark.sparkContext.defaultParallelism)
+    # one range partition per task slot, floor 2 (a sort, not a kernel
+    # grid: its width stays core-bound)
+    n_part = max(2, sizing.cores(spark))
     values = values.persist()  # scanned by 3-4 jobs below; tiny (distinct keys)
     n_values = values.count()
     if n_values <= small_threshold:

@@ -44,7 +44,14 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .ann import QUANT, _as_double, _merge_topk, _TOPK_PARTIAL
+from .ann import (
+    QUANT,
+    _as_double,
+    _list_sizes,
+    _merge_topk,
+    _square_grid,
+    _TOPK_PARTIAL,
+)
 
 try:  # by-value pickling (see recommenders/slim.py note)
     from pyspark import cloudpickle as _cp
@@ -54,6 +61,7 @@ except Exception:  # pragma: no cover
     pass
 
 from ..functions.blasctl import limit_blas_threads  # noqa: E402
+from .. import sizing  # noqa: E402
 
 
 def _sub_frame(embeddings: DataFrame, vec_col: str, dsub: int) -> DataFrame:
@@ -634,16 +642,7 @@ def pq_adc_topk(
         _as_double(F.col(vec_col)).alias("_emb"),
     )
     n = prb_payload.count()
-    par = spark.sparkContext.defaultParallelism
-    min_blocks = max(2, int(math.ceil(math.sqrt(3.0 * par))))
-    n_blk = max(min_blocks, int(math.ceil(n / float(block_rows))))
-    idx = idx_payload.withColumn("_side", F.lit(0)).withColumn(
-        "iblk", F.pmod(F.xxhash64("vec_id"), F.lit(n_blk)).cast("int")
-    ).withColumn("pblk", F.explode(F.sequence(F.lit(0), F.lit(n_blk - 1))))
-    prb = prb_payload.withColumn("_side", F.lit(1)).withColumn(
-        "pblk", F.pmod(F.xxhash64("vec_id"), F.lit(n_blk)).cast("int")
-    ).withColumn("iblk", F.explode(F.sequence(F.lit(0), F.lit(n_blk - 1))))
-    both = idx.unionByName(prb.select(idx.columns))
+    both, n_blk = _square_grid(idx_payload, prb_payload, n, block_rows, None)
 
     kk = int(k)
 
@@ -660,9 +659,9 @@ def pq_adc_topk(
             return empty
         return _adc_task_body(probes, index, bc.value, kk)
 
-    partials = both.repartition(n_blk * n_blk, "pblk", "iblk").groupby(
-        "pblk", "iblk"
-    ).applyInPandas(lambda _k, pdf: task(pdf), _TOPK_PARTIAL)
+    partials = both.groupby("pblk", "iblk").applyInPandas(
+        lambda _k, pdf: task(pdf), _TOPK_PARTIAL
+    )
     # every probe contributes <= k rows from each of its n_blk index blocks
     return _merge_topk(
         partials, k, est_rows=n * n_blk * kk
@@ -762,14 +761,7 @@ def ivfpq_topk(
 
     # sub-block the largest list so a hot cluster cannot make one task
     # unbounded (same discipline as ivf_topk)
-    mx_row = (
-        idx_payload.groupBy("list_id")
-        .count()
-        .agg(F.max("count").alias("m"), F.sum("count").alias("n"))
-        .collect()
-    )
-    mx = int(mx_row[0]["m"] or 1)
-    n_vec = int(mx_row[0]["n"] or 0)
+    n_lists, mx, n_vec, n_pairs = _list_sizes(idx_payload)
     n_sub = max(1, int(math.ceil(mx / float(block_rows))))
     idx = idx_payload.withColumn("_side", F.lit(0)).withColumn(
         "sub_b", F.pmod(F.xxhash64("vec_id"), F.lit(n_sub)).cast("int")
@@ -794,8 +786,13 @@ def ivfpq_topk(
             return empty
         return _adc_task_body(probes, index, bc.value, kk)
 
+    # explicit task-count repartition (AQE-exempt, see ann._square_grid);
+    # each probe scores its n_probe lists' candidates
+    n_tasks = sizing.kernel_tasks(
+        sizing.cores(spark), n_lists * n_sub, max(1, n_probe) * n_pairs
+    )
     partials = both.repartition(
-        max(n_list * n_sub, 32), "list_id", "sub_b"
+        n_tasks, "list_id", "sub_b"
     ).groupby("list_id", "sub_b").applyInPandas(
         lambda _k, pdf: task(pdf), _TOPK_PARTIAL
     )
@@ -1063,14 +1060,7 @@ def ivfpq_residual_topk(
         .join(home, "vec_id")
         .select("vec_id", "list_id", "_codes", "_emb")
     )
-    mx_row = (
-        idx_payload.groupBy("list_id")
-        .count()
-        .agg(F.max("count").alias("m"), F.sum("count").alias("n"))
-        .collect()
-    )
-    mx = int(mx_row[0]["m"] or 1)
-    n_vec = int(mx_row[0]["n"] or 0)
+    n_lists, mx, n_vec, n_pairs = _list_sizes(idx_payload)
     n_sub = max(1, int(math.ceil(mx / float(block_rows))))
     idx = idx_payload.withColumn("_side", F.lit(0)).withColumn(
         "sub_b", F.pmod(F.xxhash64("vec_id"), F.lit(n_sub)).cast("int")
@@ -1113,8 +1103,12 @@ def ivfpq_residual_topk(
         np.divide(cos, denom, out=cos)
         return _emit_block_topk(cos, p_ids, i_ids, kk)
 
+    # explicit task-count repartition (AQE-exempt, see ann._square_grid)
+    n_tasks = sizing.kernel_tasks(
+        sizing.cores(spark), n_lists * n_sub, n_pairs
+    )
     partials = (
-        both.repartition(max(n_list * n_sub, 32), "list_id", "sub_b")
+        both.repartition(n_tasks, "list_id", "sub_b")
         .groupby("list_id", "sub_b")
         .applyInPandas(task, _TOPK_PARTIAL)
     )

@@ -23,8 +23,9 @@ fixed grid, so sums are order-independent and bit-identical anywhere:
 Scale shape: bounds are a d-row aggregate (broadcast as literals); codes
 are pure codegen column expressions (no UDF); the flat search is the
 blocked all-pairs GEMM (`ann._hash_blocks` — bounded task memory, no
-driver collect).  At 100 TB the same codes feed the IVF-routed kernel
-instead; the flat path here is the exact-baseline index.
+driver collect, grid sized by `contentwise_impressions_spark.sizing`).
+At 100 TB the same codes feed the IVF-routed kernel instead; the flat
+path here is the exact-baseline index.
 """
 
 from __future__ import annotations
@@ -49,9 +50,12 @@ from .ann import (  # noqa: E402
     _TOPK_PARTIAL,
     _as_double,
     _hash_blocks,
+    _list_sizes,
     _merge_topk,
 )
+from .blocked_topk import _cached  # noqa: E402
 from ..functions.blasctl import limit_blas_threads  # noqa: E402
+from .. import sizing  # noqa: E402
 
 #: bounds grid 2^10: coarse enough that 255·imn + code·(imx−imn) and all
 #: its sums stay exact (see module docstring), fine enough that the grid
@@ -307,12 +311,40 @@ def sq8_residual_payload(
     return dec.join(prb, "vec_id").select("vec_id", "list_id", "_emb", "_x")
 
 
+def _list_grid_topk(
+    idx: DataFrame,
+    prb: DataFrame,
+    k: int,
+    n_groups: int,
+    n_pairs: int,
+    est_rows: int,
+) -> DataFrame:
+    """Shared (list_id, sub) search of both IVF-SQ8 paths: tagged union →
+    one groupBy, the `_sq8_task` ADC kernel per group, global merge.
+
+    Explicit task-count repartition on the group keys (r16): AQE-exempt,
+    keeps the GEMM tasks spread under the session's size-based
+    coalescing; the width comes from the score-cell count
+    (sizing.kernel_tasks)."""
+    n_tasks = sizing.kernel_tasks(
+        sizing.cores(idx.sparkSession), n_groups, n_pairs
+    )
+    partials = (
+        idx.unionByName(prb.select(idx.columns))
+        .repartition(n_tasks, "list_id", "sub")
+        .groupby("list_id", "sub")
+        .applyInPandas(_sq8_task_fn(int(k)), _TOPK_PARTIAL)
+    )
+    return _merge_topk(partials, k, est_rows=est_rows)
+
+
 def sq8_ivf_residual_topk(
     embeddings: DataFrame,
     assignments: DataFrame,
     k: int = 3,
     vec_col: str = "embedding",
     block_rows: int = 4096,
+    cache_key: str | None = None,
 ) -> DataFrame:
     """Residual-encoded IVF-SQ8 — ``sq8_ivf_topk`` with the
     ``by_residual=True`` codec of :func:`sq8_residual_payload`; same
@@ -324,25 +356,22 @@ def sq8_ivf_residual_topk(
     groupBys and the index/probe branches (without it the caller's Lloyd
     subtree re-executes per reuse — measured 24.5x warm at 10x data on
     an uncached 80-list quantizer), and `payload` carries the
-    reconstruction arrays both union branches read.  bench.py's
-    between-family release sweeps the blocks."""
+    reconstruction arrays both union branches read.  `cache_key`: as in
+    ``sq8_ivf_topk``."""
     from pyspark import StorageLevel
 
-    home = assignments.select("vec_id", "list_id").persist(
-        StorageLevel.MEMORY_AND_DISK
+    def build() -> tuple:
+        home = assignments.select("vec_id", "list_id").persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+        payload = sq8_residual_payload(embeddings, home, vec_col).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+        return (home, payload, *_list_sizes(payload))
+
+    _, payload, n_lists, mx, n_vec, n_pairs = _cached(
+        embeddings.sparkSession, cache_key and ("sq8ivfr", cache_key), build
     )
-    payload = sq8_residual_payload(embeddings, home, vec_col).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    kk = int(k)
-    mx_row = (
-        payload.groupBy("list_id")
-        .count()
-        .agg(F.max("count").alias("m"), F.sum("count").alias("n"))
-        .collect()
-    )
-    mx = int(mx_row[0]["m"] or 1)
-    n_vec = int(mx_row[0]["n"] or 0)
     n_sub = max(1, int(math.ceil(mx / float(block_rows))))
     idx = payload.withColumn("_side", F.lit(0)).withColumn(
         "sub", F.pmod(F.xxhash64("vec_id"), F.lit(n_sub)).cast("int")
@@ -350,19 +379,11 @@ def sq8_ivf_residual_topk(
     prb = payload.withColumn("_side", F.lit(1)).withColumn(
         "sub", F.explode(F.sequence(F.lit(0), F.lit(n_sub - 1)))
     )
-    both = idx.unionByName(prb.select(idx.columns))
-    # explicit task-count repartition (r16): AQE-exempt, keeps the GEMM
-    # tasks spread under the session's size-based coalescing — see
-    # ann._hash_blocks
-    par = embeddings.sparkSession.sparkContext.defaultParallelism
-    partials = both.repartition(
-        max(32, 2 * par), "list_id", "sub"
-    ).groupby("list_id", "sub").applyInPandas(
-        _sq8_task_fn(kk), _TOPK_PARTIAL
-    )
     # home-list routing: each probe scores in its home list's n_sub
     # sub-blocks, <= k rows each
-    return _merge_topk(partials, k, est_rows=n_vec * n_sub * kk)
+    return _list_grid_topk(
+        idx, prb, k, n_lists * n_sub, n_pairs, n_vec * n_sub * int(k)
+    )
 
 
 def sq8_ivf_topk(
@@ -372,6 +393,7 @@ def sq8_ivf_topk(
     vec_col: str = "embedding",
     block_rows: int = 4096,
     probes: DataFrame | None = None,
+    cache_key: str | None = None,
 ) -> DataFrame:
     """IVF-routed SQ8 search — the FAISS ``IndexIVFScalarQuantizer``
     analog, and the scale path for the flat ``sq8_topk`` baseline
@@ -397,47 +419,48 @@ def sq8_ivf_topk(
     bit-for-bit.
 
     The assignment table is PERSISTED before the search fans it out
-    (sizing count + index and probe branches): with an uncached coarse
-    quantizer, each reuse would otherwise re-execute the caller's whole
-    Lloyd subtree — measured 24.5x warm at 10x data on an 80-list
-    quantizer before the pin, ~0.9x after (constant per-list slab).  The SQ8 payload is persisted
-    for the same reason (both union branches read it).  Deliberately NOT
-    unpersisted: the returned plan reads through the caches lazily, so an
-    in-function unpersist would forfeit the reuse.  bench.py's
-    between-family release sweeps the blocks; a library caller issuing
-    many invocations in one session owns the same sweep
-    (``spark.catalog.clearCache()`` or targeted ``unpersist`` once the
-    result is consumed), else each call retains its cached tables."""
+    (sizing aggregate + index and probe branches): with an uncached
+    coarse quantizer, each reuse would otherwise re-execute the caller's
+    whole Lloyd subtree — measured 24.5x warm at 10x data on an 80-list
+    quantizer before the pin, ~0.9x after (constant per-list slab).  The
+    SQ8 payload is persisted for the same reason (both union branches
+    read it).  Deliberately NOT unpersisted: the returned plan reads
+    through the caches lazily.
+
+    `cache_key`: optional session-cache key (see blocked_topk._cached) —
+    it must name every input the cached value depends on (the table, the
+    quantizer's n_list/n_iters, the probe routing).  Keyed calls share ONE
+    persisted payload/home/probe copy and its sizing facts per session,
+    released by ``plans.shared.release_session_payloads``; an un-keyed
+    call persists fresh copies that its caller owns (sweep them with
+    ``spark.catalog.clearCache()`` or a targeted ``unpersist``)."""
     from pyspark import StorageLevel
 
-    payload = _sq8_payload(embeddings, vec_col).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    home = assignments.select("vec_id", "list_id").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    # multiprobe: `probes` = (vec_id, list_id) pairs for each probe's
-    # n_probe nearest lists (ann.ivf_probe_lists) — the standard IVF
-    # recall knob.  Exactly-once scoring holds: the index side stays
-    # home-list-only (unique per candidate) and a probe's lists are
-    # distinct, so each (probe, candidate) pair meets in at most one
-    # (list_id, sub) task.
-    prb_lists = (
-        home
-        if probes is None
-        else probes.select("vec_id", "list_id").persist(
+    def build() -> tuple:
+        payload = _sq8_payload(embeddings, vec_col).persist(
             StorageLevel.MEMORY_AND_DISK
         )
+        home = assignments.select("vec_id", "list_id").persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+        # multiprobe: `probes` = (vec_id, list_id) pairs for each probe's
+        # n_probe nearest lists (ann.ivf_probe_lists) — the standard IVF
+        # recall knob.  Exactly-once scoring holds: the index side stays
+        # home-list-only (unique per candidate) and a probe's lists are
+        # distinct, so each (probe, candidate) pair meets in at most one
+        # (list_id, sub) task.
+        prb_lists = (
+            home
+            if probes is None
+            else probes.select("vec_id", "list_id").persist(
+                StorageLevel.MEMORY_AND_DISK
+            )
+        )
+        return (payload, home, prb_lists, *_list_sizes(home))
+
+    payload, home, prb_lists, n_lists, mx, n_vec, n_pairs = _cached(
+        embeddings.sparkSession, cache_key and ("sq8ivf", cache_key), build
     )
-    kk = int(k)
-    mx_row = (
-        home.groupBy("list_id")
-        .count()
-        .agg(F.max("count").alias("m"), F.sum("count").alias("n"))
-        .collect()
-    )
-    mx = int(mx_row[0]["m"] or 1)
-    n_vec = int(mx_row[0]["n"] or 0)
     n_sub = max(1, int(math.ceil(mx / float(block_rows))))
     idx = (
         payload.join(home, "vec_id")
@@ -451,17 +474,10 @@ def sq8_ivf_topk(
         .withColumn("_side", F.lit(1))
         .withColumn("sub", F.explode(F.sequence(F.lit(0), F.lit(n_sub - 1))))
     )
-    both = idx.unionByName(prb.select(idx.columns))
-    # explicit task-count repartition (r16): AQE-exempt, keeps the GEMM
-    # tasks spread under the session's size-based coalescing — see
-    # ann._hash_blocks
-    par = embeddings.sparkSession.sparkContext.defaultParallelism
-    partials = both.repartition(
-        max(32, 2 * par), "list_id", "sub"
-    ).groupby("list_id", "sub").applyInPandas(
-        _sq8_task_fn(kk), _TOPK_PARTIAL
-    )
     # probes route to n_sub sub-blocks per probed list, <= k rows each
-    # (n_vec counts home rows; the multiprobe factor is a small constant,
-    # an order-of-magnitude sizing, not a contract)
-    return _merge_topk(partials, k, est_rows=n_vec * n_sub * kk)
+    # (n_vec counts home rows and Σ list² the home-only cells; the
+    # multiprobe factor is a small constant, an order-of-magnitude
+    # sizing, not a contract)
+    return _list_grid_topk(
+        idx, prb, k, n_lists * n_sub, n_pairs, n_vec * n_sub * int(k)
+    )

@@ -1605,7 +1605,7 @@ def q_ann_ivf_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     home = ivf_assignments(
         emb, n_list=8, n_iters=2, distances=_ivf_distances(spark, sf_dir)
     )
-    return sq8_ivf_topk(emb, home, k=3)
+    return sq8_ivf_topk(emb, home, k=3, cache_key=f"{sf_dir}:ivf_sq8:8:2")
 
 
 register(
@@ -1690,7 +1690,9 @@ def q_ann_ivf_sq8_residual_topk(
     home = ivf_assignments(
         emb, n_list=8, n_iters=2, distances=_ivf_distances(spark, sf_dir)
     )
-    return sq8_ivf_residual_topk(emb, home, k=3)
+    return sq8_ivf_residual_topk(
+        emb, home, k=3, cache_key=f"{sf_dir}:ivf_sq8_residual:8:2"
+    )
 
 
 register(
@@ -1786,7 +1788,9 @@ def q_ann_ivf_sq8_multiprobe_topk(
     probes = ivf_probe_lists(
         emb, n_list=8, n_iters=2, n_probe=2, distances=d
     ).select("vec_id", "list_id")
-    return sq8_ivf_topk(emb, home, k=3, probes=probes)
+    return sq8_ivf_topk(
+        emb, home, k=3, probes=probes, cache_key=f"{sf_dir}:ivf_sq8:8:2:probe2"
+    )
 
 
 register(
@@ -2224,7 +2228,8 @@ def q_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # width from the corpus size (parquet footer, ~32k rows/task) rather
     # than the session shuffle default; this row scaled at 0.59 (8 cores
     # beating 32) in the r16 driver block — scheduling overhead, not work
-    from ..sources.tables import table_rows, width_for_rows
+    from ..sizing import width_for_rows
+    from ..sources.tables import table_rows
 
     width = width_for_rows(table_rows(sf_dir, "documents"))
     if width is not None:

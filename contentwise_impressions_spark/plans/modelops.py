@@ -2356,7 +2356,9 @@ def q_stream_popularity_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
+    from ..sizing import width_for_rows
     from ..sources.interactions import events_as_interactions
+    from ..sources.tables import table_rows
     from ..streaming.ingest import stream_events
     from ..streaming.serving import (
         _store_dir,
@@ -2368,10 +2370,11 @@ def q_stream_popularity_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = load_table(spark, sf_dir, "events")
     # scratch split (r16 ADVICE): ONLY the fsync-heavy checkpoint rides
     # the ephemeral scratch base (tmpfs by default — every micro-batch
-    # fsyncs the offset WAL + state deltas there; the r16 #9 win); the
-    # delivery halves (a full parquet copy of the event log) and the
-    # snapshot versions stay on the default temp dir so a larger SF or a
-    # memory-constrained host can't exhaust tmpfs on bulk data.  A
+    # fsyncs the offset WAL + one state delta per state partition there,
+    # the partition count sized from the event count below; the r16 #9
+    # win); the delivery halves (a full parquet copy of the event log)
+    # and the snapshot versions stay on the default temp dir so a larger
+    # SF or a memory-constrained host can't exhaust tmpfs on bulk data.  A
     # production store belongs on durable storage ($SPARK_GRAFT_STREAM_CKPT
     # overrides the scratch base).
     from ..streaming.ingest import scratch_base
@@ -2399,10 +2402,15 @@ def q_stream_popularity_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         store = os.path.join(work, "store")
         ckpt = os.path.join(ckpt_work, "ckpt")
         src = stream_events(spark, src_dir, schema=batch.schema)
-        # right-size the ephemeral run's state-store partition count (same
-        # rationale as ingest.run_stream_once)
+        # state-store width from the event count (parquet footer, rows per
+        # task — sizing.width_for_rows): every state partition commits a
+        # delta per micro-batch, so the width follows the data, not the
+        # session's shuffle width.  A fresh checkpoint per run picks the
+        # width up; an unknown row count keeps the session width.
+        width = width_for_rows(table_rows(sf_dir, "events"))
         prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+        if width is not None:
+            spark.conf.set("spark.sql.shuffle.partitions", str(width))
         try:
             q = maintain_popularity_store(
                 events_as_interactions(src).select("item_id", "ts"),

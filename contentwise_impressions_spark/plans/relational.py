@@ -1608,7 +1608,8 @@ def q_rolling_7d_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 150k-row frame, while at 100 TB the same rule yields thousands of
     # partitions.  The explicit repartition satisfies the window's
     # required distribution, so the exchange COUNT is unchanged.
-    from ..sources.tables import table_rows, width_for_rows
+    from ..sizing import width_for_rows
+    from ..sources.tables import table_rows
 
     width = width_for_rows(table_rows(sf_dir, "orders"))
     if width is not None:

@@ -78,13 +78,3 @@ def table_rows(sf_dir: str, name: str) -> int | None:
     except Exception:
         return None
 
-
-def width_for_rows(rows: int | None, rows_per_task: int = 1 << 15) -> int | None:
-    """Partition count for an explicit repartition over ~``rows`` rows:
-    ceil(rows / rows_per_task), floor 2 — the same ~32k-rows-per-task
-    rule the top-k merge uses (operators/ann._MERGE_ROWS_PER_PART).
-    Scale-adaptive: grows linearly with data, independent of the local
-    core count."""
-    if rows is None:
-        return None
-    return max(2, -(-int(rows) // rows_per_task))

@@ -222,3 +222,48 @@ def test_overlap_jobs_runs_all_and_propagates_failure(spark):
     with pytest.raises(RuntimeError, match="chain failed"):
         shared.overlap_jobs(lambda: seen.append("x"), boom)
     assert seen == ["x"]  # the healthy chain still completed
+
+
+def test_ivf_sq8_keyed_calls_share_one_persisted_copy(spark):
+    """Both IVF-SQ8 searches session-cache their persisted payload/home
+    tables and sizing facts under ``cache_key``: a second keyed call adds
+    no persisted relation, runs no eager sizing job while it builds, and
+    returns the same rows; after ``release_session_payloads`` the next
+    call rebuilds identical rows."""
+    from contentwise_impressions_spark.operators.ann import ivf_assignments
+    from contentwise_impressions_spark.operators.sq import (
+        sq8_ivf_residual_topk,
+        sq8_ivf_topk,
+    )
+    from contentwise_impressions_spark.sources.tables import load_table
+
+    sc = spark.sparkContext
+    release_session_payloads(spark, blocking=True)
+    emb = load_table(spark, SF, "embeddings")
+    # the quantizer's Lloyd iterations run eagerly; only the search's own
+    # build is watched for jobs
+    home = ivf_assignments(emb, n_list=8, n_iters=2)
+    for fn in (sq8_ivf_topk, sq8_ivf_residual_topk):
+        key = f"{SF}:{fn.__name__}:8:2"
+
+        def build(group: str):
+            sc.setJobGroup(group, group)
+            try:
+                return fn(emb, home, k=3, cache_key=key)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+
+        def rows(df):
+            return sorted(map(tuple, df.collect()))
+
+        first = rows(build(f"{fn.__name__}-first"))
+        n_persisted = _jvm_persistent_rdd_count(spark)
+        group = f"{fn.__name__}-second"
+        second = build(group)
+        assert not sc.statusTracker().getJobIdsForGroup(group)
+        assert rows(second) == first
+        assert _jvm_persistent_rdd_count(spark) == n_persisted
+        release_session_payloads(spark, blocking=True)
+        assert _jvm_persistent_rdd_count(spark) == 0
+        assert rows(build(f"{fn.__name__}-rebuilt")) == first
+        release_session_payloads(spark, blocking=True)

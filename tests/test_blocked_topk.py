@@ -105,7 +105,7 @@ def test_single_item_emits_nothing(spark):
     assert blocked_cosine_topk(feat=feat, k=5).count() == 0
 
 
-def test_blocking_invariance(tiny):
+def test_blocking_invariance(tiny, spark):
     # results must not depend on the block decomposition
     feat_rows, adj_rows, feat, adj = tiny
     a = _collected(blocked_cosine_topk(feat=feat, adj=adj, k=2, block_rows=2))
@@ -113,6 +113,19 @@ def test_blocking_invariance(tiny):
         blocked_cosine_topk(feat=feat, adj=adj, k=2, block_rows=4096, min_blocks=2)
     )
     assert a == b
+    # adjacency only (the user-KNN shape): 60 users over 25 items is far
+    # below one task's work, so the sizing rule puts it on a 1-block grid
+    from contentwise_impressions_spark import sizing
+    from contentwise_impressions_spark.operators.blocked_topk import _grid_blocks
+
+    urm_rows = [
+        (u, it) for u in range(1, 61) for it in range(25) if (u * 7 + it * 3) % 5 < 2
+    ]
+    assert _grid_blocks(60, sizing.cores(spark)) == 1
+    urm = spark.createDataFrame(urm_rows, "item_id long, nbr long")
+    one = _collected(blocked_cosine_topk(adj=urm, k=4))
+    five = _collected(blocked_cosine_topk(adj=urm, k=4, min_blocks=5))
+    assert one == five == _naive_hybrid([], urm_rows, 1.0, 4)
 
 
 def test_requires_some_input():
@@ -264,17 +277,15 @@ def test_merge_exchange_width_is_data_derived(tiny, spark):
     # derived from the partial-row estimate (AQE-exempt REPARTITION_BY_NUM),
     # instead of inheriting the session shuffle default — and the rows are
     # identical under any width (the window result is partitioning-free).
-    from contentwise_impressions_spark.operators.ann import (
-        _MERGE_ROWS_PER_PART,
-        _merge_topk,
-    )
+    from contentwise_impressions_spark.operators.ann import _merge_topk
+    from contentwise_impressions_spark.sizing import ROWS_PER_TASK
 
     partials = spark.createDataFrame(
         [(i % 7, 100 + i, float(i % 13)) for i in range(200)],
         "vec_id long, neighbor_id long, cosine double",
     )
     base = _merge_topk(partials, 3)
-    hinted = _merge_topk(partials, 3, est_rows=5 * _MERGE_ROWS_PER_PART)
+    hinted = _merge_topk(partials, 3, est_rows=5 * ROWS_PER_TASK)
     assert sorted(map(tuple, base.collect())) == sorted(
         map(tuple, hinted.collect())
     )
@@ -313,15 +324,20 @@ def test_alloc_mode_geometry():
     assert _alloc_mode_for(1430) == (256, 64)  # 16 MB buffer -> floors
     trim, mmap = _alloc_mode_for(4096)  # 134 MB buffer (block_rows cap)
     assert trim == 8 * 128 and mmap == 2 * 128
-    # _grid_blocks is the same formula blocked_cosine_topk inlined before
-    # r17 (exported so the family warmup pre-faults the exact task shape)
-    for n, par in [(6, 4), (20_000, 32), (1_000_000, 32), (200, 8)]:
+    # _grid_blocks is the call blocked_cosine_topk makes (exported so the
+    # family warmup pre-faults the exact task shape).  Large grids keep
+    # the former ≈3×-cores rule's block counts ...
+    for n, par in [(20_000, 32), (1_000_000, 32)]:
         min_blocks = max(
             2, int(math.ceil((math.sqrt(1.0 + 24.0 * par) - 1.0) / 2.0))
         )
         assert _grid_blocks(n, par) == max(
             min_blocks, int(math.ceil(n / 4096.0))
         )
+    # ... while work below one task's worth (sizing.WORK_PER_TASK cells)
+    # runs on a single block instead of a core-count-sized grid
+    for n, par in [(6, 4), (200, 8)]:
+        assert _grid_blocks(n, par) == 1
 
 
 def test_retain_task_buffers_idempotent():
