@@ -2340,7 +2340,8 @@ def q_stream_popularity_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     Base/DataIO.py).
 
     Delivery is TWO micro-batches (the event log split in half by
-    event-id hash, maxFilesPerTrigger=1), so batch 2 exercises the real
+    event-id hash, maxFilesPerTrigger=1; the store's aggregation has no
+    watermark, so no no-data batch follows), so batch 2 exercises the real
     snapshot MERGE path — left-anti of the previous snapshot against the
     updated groups, union, new version directory, pointer flip — not
     just the bootstrap write.  The final snapshot is a pure function of
@@ -2413,10 +2414,9 @@ def q_stream_popularity_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.conf.set("spark.sql.shuffle.partitions", str(width))
         try:
             q = maintain_popularity_store(
-                events_as_interactions(src).select("item_id", "ts"),
+                events_as_interactions(src).select("item_id"),
                 store,
                 ckpt,
-                watermark="2 hours",
                 available_now=True,
             )
             q.awaitTermination()

@@ -9,8 +9,12 @@ hand (dataset.py:539-541).
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TESTDATA_TABLES = (
     "region",
@@ -26,21 +30,67 @@ TESTDATA_TABLES = (
 )
 
 
+#: session settings that change the type Parquet inference gives a column
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+
+#: inferred schema per (file identity, inference settings); one entry per
+#: distinct file version read by this process
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a file's schema once.
+
+    Inference reads the footer in a Spark job; a read with the schema
+    given runs none.  The key is the file's identity
+    (realpath, inode, mtime, size) plus the settings in ``_INFER_CONFS``,
+    so a file rewritten in place, or a session that infers other types,
+    infers again.  A directory, or a path ``os.stat`` cannot see (a
+    non-local URI), is inferred on every read.
+    """
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    if not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (
+        os.path.realpath(path),
+        st.st_ino,
+        st.st_mtime_ns,
+        st.st_size,
+        *(spark.conf.get(c, None) for c in _INFER_CONFS),
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy parquet scan of one harness table.
 
     The `events` table carries TIMESTAMP(NANOS) which Spark's vectorized
     reader rejects; we read nanos as int64 (legacy conf) and rebuild a
     microsecond TimestampType column with integer `div` (no double
-    round-trip — ns epoch values exceed the 53-bit mantissa).
+    round-trip — ns epoch values exceed the 53-bit mantissa).  The conf
+    is set on every call: a read with a cached schema still needs it.
     """
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = _read_parquet(spark, path)
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read_parquet(spark, path)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
@@ -68,8 +118,6 @@ def table_rows(sf_dir: str, name: str) -> int | None:
     §2.2: exchange/window widths sized by the data, not by the session's
     core count).  None when the footer isn't readable (caller falls back
     to the planner's default width)."""
-    import os
-
     try:
         import pyarrow.parquet as pq
 

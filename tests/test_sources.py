@@ -357,3 +357,117 @@ def test_ratings_source_scan_pushdown_split(spark, sf_dir):
     ]
     assert not any(">= 5.0" in ln for ln in scan_filters), plan
     assert df.count() > 0
+
+
+def _group_jobs(spark, group: str, fence: str) -> list[int]:
+    """Job ids submitted under ``group``, read after a fence job run under
+    ``fence`` is visible: the status store applies listener events in
+    order, so every job the group submitted before the fence is counted."""
+    import time
+
+    sc = spark.sparkContext
+    sc.setJobGroup(fence, "fence")
+    spark.range(1).collect()
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(fence):
+        assert time.monotonic() < deadline, "fence job never reported"
+        time.sleep(0.05)
+    return list(tracker.getJobIdsForGroup(group))
+
+
+def test_load_table_infers_schema_once(spark, sf_dir, tmpdir):
+    """A second read of an unchanged file runs no footer job and returns
+    the same rows."""
+    from contentwise_impressions_spark.sources.tables import load_table
+
+    shutil.copy(f"{sf_dir}/orders.parquet", tmpdir / "orders.parquet")
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("cwi_infer_first", "first read")
+        first = load_table(spark, str(tmpdir), "orders")
+        sc.setJobGroup("cwi_infer_again", "second read")
+        again = load_table(spark, str(tmpdir), "orders")
+        assert _group_jobs(spark, "cwi_infer_first", "cwi_infer_fence1")
+        assert _group_jobs(spark, "cwi_infer_again", "cwi_infer_fence2") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert again.schema == first.schema
+    assert sorted(again.collect()) == sorted(first.collect())
+
+
+def test_load_table_rewritten_file_shows_new_column(spark, tmpdir):
+    """The schema cache keys on the file's identity: a file rewritten at
+    the same path with an extra column shows that column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from contentwise_impressions_spark.sources.tables import load_table
+
+    path = tmpdir / "orders.parquet"
+    pq.write_table(pa.table({"k": [1, 2], "v": ["a", "b"]}), path)
+    assert load_table(spark, str(tmpdir), "orders").columns == ["k", "v"]
+    pq.write_table(pa.table({"k": [1, 2], "v": ["a", "b"], "w": [0.5, 1.5]}), path)
+    df = load_table(spark, str(tmpdir), "orders")
+    assert df.columns == ["k", "v", "w"]
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "a", 0.5), (2, "b", 1.5)]
+
+
+def test_load_table_events_nanos_ts_stays_timestamp(spark, tmpdir):
+    """events.ts stored as TIMESTAMP(NANOS) reads as TimestampType on the
+    inferring call and on the cached-schema call alike."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import TimestampType
+
+    from contentwise_impressions_spark.sources.tables import load_table
+
+    ns = [1_600_000_000_123_456_789, 1_600_003_600_000_001_000]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2], pa.int64()),
+                "ts": pa.array(ns, pa.timestamp("ns", tz="UTC")),
+            }
+        ),
+        tmpdir / "events.parquet",
+    )
+    expect = [
+        dt.datetime.fromtimestamp(n // 1000 / 1e6, dt.timezone.utc)
+        .replace(tzinfo=None)
+        for n in ns
+    ]
+    for _ in range(2):
+        df = load_table(spark, str(tmpdir), "events")
+        assert isinstance(df.schema["ts"].dataType, TimestampType)
+        got = (
+            df.orderBy("event_id")
+            .select(F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("t"))
+            .collect()
+        )
+        assert [r["t"] for r in got] == [
+            e.strftime("%Y-%m-%d %H:%M:%S.%f") for e in expect
+        ]
+
+
+def test_query_layers_read_base_tables_through_load_table():
+    """Base tables reach plans, operators and recommenders through
+    ``sources.tables.load_table`` (one schema inference per file); a
+    direct parquet read there would run a footer job per call."""
+    import re
+
+    import contentwise_impressions_spark as pkg
+
+    direct = re.compile(r"\.read\s*(\.schema\([^)]*\)\s*)?\.parquet\(")
+    root = Path(pkg.__file__).resolve().parent
+    hits = [
+        f"{p.relative_to(root)}:{i}"
+        for layer in ("plans", "operators", "recommenders")
+        for p in sorted((root / layer).rglob("*.py"))
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if direct.search(line)
+    ]
+    assert hits == [], hits

@@ -372,6 +372,105 @@ def test_popularity_serving_store_matches_batch(spark, sf_dir):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def _deliver_half(ev, in_dir: Path, part: int) -> None:
+    """Ship one flush file: the events whose id has parity ``part``."""
+    import pyspark.sql.functions as F
+
+    ev.filter(F.col("event_id") % 2 == part).coalesce(1).write.mode(
+        "append"
+    ).parquet(str(in_dir))
+
+
+def _run_popularity_store(spark, ev, tmp: Path, store: Path):
+    """Drain ``tmp/in`` into the store (available-now trigger, checkpoint
+    ``tmp/ckpt``) and return the finished query."""
+    from contentwise_impressions_spark.sources.interactions import (
+        events_as_interactions,
+    )
+    from contentwise_impressions_spark.streaming.serving import (
+        maintain_popularity_store,
+    )
+
+    src = stream_events(spark, str(tmp / "in"), schema=ev.schema)
+    q = maintain_popularity_store(
+        events_as_interactions(src).select("item_id"),
+        str(store),
+        str(tmp / "ckpt"),
+        available_now=True,
+    )
+    assert q.awaitTermination(300)
+    return q
+
+
+def _batch_counts(ev) -> set:
+    import pyspark.sql.functions as F
+
+    from contentwise_impressions_spark.sources.interactions import (
+        events_as_interactions,
+    )
+
+    return {
+        (r["item_id"], r["popularity"])
+        for r in events_as_interactions(ev)
+        .groupBy("item_id")
+        .agg(F.count("*").alias("popularity"))
+        .collect()
+    }
+
+
+def _store_rows(spark, store: Path) -> set:
+    from contentwise_impressions_spark.streaming.serving import (
+        read_popularity_store,
+    )
+
+    return {
+        (r["item_id"], r["popularity"])
+        for r in read_popularity_store(spark, str(store)).collect()
+    }
+
+
+def test_popularity_store_two_files_two_batches(spark, sf_dir, tmp_path):
+    """Two delivered files make exactly two micro-batches: the item key
+    carries no event time, so no watermark schedules a trailing no-data
+    batch that rewrites an identical snapshot."""
+    import os
+
+    ev = load_table(spark, sf_dir, "events")
+    for part in (0, 1):
+        _deliver_half(ev, tmp_path / "in", part)
+    store = tmp_path / "store"
+    q = _run_popularity_store(spark, ev, tmp_path, store)
+    assert [p.batchId for p in q.recentProgress] == [0, 1]
+    assert sorted(d for d in os.listdir(store) if d.startswith("v")) == [
+        "v0",
+        "v1",
+    ]
+    assert _store_rows(spark, store) == _batch_counts(ev)
+
+
+def test_popularity_store_resumes_from_checkpoint(spark, sf_dir, tmp_path):
+    """Drain file 1, then deliver file 2 and restart on the same
+    checkpoint and store: the resumed run processes only the new file,
+    merges it over the first snapshot and ends where an uninterrupted
+    run over both files ends."""
+    ev = load_table(spark, sf_dir, "events")
+    whole = tmp_path / "whole"
+    for part in (0, 1):
+        _deliver_half(ev, whole / "in", part)
+    _run_popularity_store(spark, ev, whole, whole / "store")
+
+    cut = tmp_path / "cut"
+    _deliver_half(ev, cut / "in", 0)
+    q = _run_popularity_store(spark, ev, cut, cut / "store")
+    assert [p.batchId for p in q.recentProgress] == [0]
+    _deliver_half(ev, cut / "in", 1)
+    q = _run_popularity_store(spark, ev, cut, cut / "store")
+    assert [p.batchId for p in q.recentProgress] == [1]
+    got = _store_rows(spark, cut / "store")
+    assert got == _store_rows(spark, whole / "store")
+    assert got == _batch_counts(ev)
+
+
 def test_stream_dedup_suppresses_redelivery(spark, sf_dir):
     """At-least-once delivery: the same flush file shipped twice must yield
     each event exactly once downstream."""
