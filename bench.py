@@ -138,7 +138,7 @@ def main() -> None:
     # streaming family-warmup: the FIRST streaming query of a session pays
     # ~30 s of engine + state-store-provider initialization (r10 verdict:
     # stream_popularity_store 36.7 s in-suite vs 5.1 s warm best-of-3) —
-    # start and drain one trivial stateful availableNow query up front so
+    # start and drain one trivial stateful query up front so
     # the stream_* per-query lines reflect steady-state engine cost
     t0 = time.perf_counter()
     try:
@@ -200,17 +200,6 @@ def main() -> None:
                 continue
             t_r = time.perf_counter()
             best = timings[name]
-            # stream_synthetic_counts registers a fresh memory-sink temp
-            # view per run (sources/pyds) — snapshot and drop the delta so
-            # reruns don't accumulate driver-memory sinks
-            try:
-                views0 = {
-                    t.name
-                    for t in spark.catalog.listTables()
-                    if t.isTemporary
-                }
-            except Exception:
-                views0 = set()
             for _ in range(2):
                 t0 = time.perf_counter()
                 try:
@@ -225,15 +214,6 @@ def main() -> None:
                         f"{type(exc).__name__}: {exc}"[:500]
                     )
                     break
-            try:
-                for v in {
-                    t.name
-                    for t in spark.catalog.listTables()
-                    if t.isTemporary
-                } - views0:
-                    spark.catalog.dropTempView(v)
-            except Exception:
-                pass
             slow_best_of_3[name] = round(best, 4)
             t_reruns += time.perf_counter() - t_r
         release_session_payloads(spark)

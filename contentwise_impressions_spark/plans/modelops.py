@@ -1432,8 +1432,9 @@ register(
 def q_stream_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization through the REAL Structured Streaming engine: file
     source over the events parquet → 1-hour watermark → session_window
-    state store → append-mode emission, run to completion with an
-    ``availableNow`` trigger and returned from the memory sink.
+    state store → append-mode emission, drained by
+    ``streaming/ingest.run_stream_once`` and read back from its parquet
+    output.
 
     Driver-checkable streaming evidence (the streaming family was
     pytest-only before round 8): the emitted set is deterministic —
@@ -1447,21 +1448,13 @@ def q_stream_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.ingest import (
         run_stream_once,
         sessionize_events,
-        stream_dir_for_file,
-        stream_events,
+        stream_events_table,
     )
 
-    import shutil
-
     utc(spark)
-    batch = load_table(spark, sf_dir, "events")
-    src_dir = stream_dir_for_file(f"{sf_dir}/events.parquet")
-    src = stream_events(spark, src_dir, schema=batch.schema)
+    src = stream_events_table(spark, sf_dir)
     sess = sessionize_events(src, gap="30 minutes", watermark="1 hour")
-    out = run_stream_once(sess, "sessionization")
-    # the memory sink holds materialized rows; the symlink dir is done
-    shutil.rmtree(src_dir, ignore_errors=True)
-    return out
+    return run_stream_once(sess, "sessionization")
 
 
 register(
@@ -1498,7 +1491,7 @@ register(
         FROM agg, wm WHERE session_end <= w
         """,
         doc="streaming sessionization through the live engine (file "
-        "source + watermark + state store, availableNow); emission "
+        "source + watermark + state store, drained); emission "
         "boundary = ms-floored max event time - delay, end <= wm "
         "(pinned empirically in tests/test_streaming.py)",
     )
@@ -1511,24 +1504,17 @@ def q_stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``tumbling_window_counts``).  Append mode emits a window once the
     final watermark reaches its end (inclusive — same eviction predicate
     as session windows, pinned in tests/test_streaming.py)."""
-    import shutil
-
     from ..streaming.ingest import (
         run_stream_once,
-        stream_dir_for_file,
-        stream_events,
+        stream_events_table,
         tumbling_event_counts,
     )
 
     utc(spark)
-    batch = load_table(spark, sf_dir, "events")
-    src_dir = stream_dir_for_file(f"{sf_dir}/events.parquet")
-    src = stream_events(spark, src_dir, schema=batch.schema)
-    out = run_stream_once(
+    src = stream_events_table(spark, sf_dir)
+    return run_stream_once(
         tumbling_event_counts(src, "1 hour", watermark="1 hour"), "tumbling"
     )
-    shutil.rmtree(src_dir, ignore_errors=True)
-    return out
 
 
 register(
@@ -1550,7 +1536,7 @@ register(
         SELECT window_start, event_type, cnt, sum_value
         FROM agg, wm WHERE window_start + INTERVAL 1 HOUR <= w
         """,
-        doc="live-engine tumbling windows + watermark (availableNow); "
+        doc="live-engine tumbling windows + watermark (drained); "
         "append emission at window_end <= final watermark",
         bench=False,
     )
@@ -1573,25 +1559,18 @@ def q_stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the log-ingest front door: state is bounded by keys inside
     the redelivery horizon, not by history.
     """
-    import shutil
-
     from ..streaming.ingest import (
         dedup_events_stream,
         run_stream_once,
-        stream_dir_for_file,
-        stream_events,
+        stream_events_table,
     )
 
     utc(spark)
-    batch = load_table(spark, sf_dir, "events")
-    src_dir = stream_dir_for_file(f"{sf_dir}/events.parquet", copies=2)
-    src = stream_events(spark, src_dir, schema=batch.schema)
-    out = run_stream_once(
+    src = stream_events_table(spark, sf_dir, copies=2)
+    return run_stream_once(
         dedup_events_stream(src, keys=["event_id"], watermark="2 hours"),
         "stream_dedup",
     )
-    shutil.rmtree(src_dir, ignore_errors=True)
-    return out
 
 
 register(
@@ -1623,31 +1602,24 @@ def q_stream_view_click_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream — the property that makes this run forever at 100 TB/day).
     Emission is deterministic for an inner join: a pair is emitted in the
     micro-batch where both sides are buffered, and nothing is dropped as
-    late in a single-delivery availableNow run (the first batch's
+    late in a single-delivery drained run (the first batch's
     watermark is 0), so the emitted set equals the exact batch interval
     join — the SQL twin below."""
-    import shutil
-
     from ..streaming.ingest import (
         run_stream_once,
-        stream_dir_for_file,
-        stream_events,
+        stream_events_table,
         stream_view_click_join,
     )
 
     utc(spark)
-    batch = load_table(spark, sf_dir, "events")
-    src_dir = stream_dir_for_file(f"{sf_dir}/events.parquet")
-    src = stream_events(spark, src_dir, schema=batch.schema)
+    src = stream_events_table(spark, sf_dir)
     joined = stream_view_click_join(
         src.filter(F.col("event_type") == "view"),
         src.filter(F.col("event_type") == "click"),
         horizon="1 hour",
         watermark="2 hours",
     )
-    out = run_stream_once(joined, "stream_vc_join")
-    shutil.rmtree(src_dir, ignore_errors=True)
-    return out
+    return run_stream_once(joined, "stream_vc_join")
 
 
 register(
@@ -1685,7 +1657,7 @@ def q_stream_view_click_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     horizon + watermark of traffic, evicted rows leave as NULL matches.
 
     Determinism: matched pairs equal the exact batch interval join
-    (single-delivery availableNow run, nothing late); unmatched views are
+    (single-delivery drained run, nothing late); unmatched views are
     NULL-emitted iff their match window [view_ts, view_ts + 1h] closed
     STRICTLY under the FINAL watermark.  The boundary is derived from
     Spark's stream-stream state-watermark rule (StreamingJoinHelper
@@ -1705,19 +1677,14 @@ def q_stream_view_click_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the engine-wide -1 sentinel so the output schema carries no
     nullable column (driver-hash portability).
     """
-    import shutil
-
     from ..streaming.ingest import (
         run_stream_once,
-        stream_dir_for_file,
-        stream_events,
+        stream_events_table,
         stream_view_click_join,
     )
 
     utc(spark)
-    batch = load_table(spark, sf_dir, "events")
-    src_dir = stream_dir_for_file(f"{sf_dir}/events.parquet")
-    src = stream_events(spark, src_dir, schema=batch.schema)
+    src = stream_events_table(spark, sf_dir)
     joined = stream_view_click_join(
         src.filter(F.col("event_type") == "view"),
         src.filter(F.col("event_type") == "click"),
@@ -1732,9 +1699,7 @@ def q_stream_view_click_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "view_ts",
     )
-    out = run_stream_once(joined, "stream_vc_outer")
-    shutil.rmtree(src_dir, ignore_errors=True)
-    return out
+    return run_stream_once(joined, "stream_vc_outer")
 
 
 register(
@@ -1802,19 +1767,14 @@ def q_stream_hopping_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     event updates duration/slide = 2 window states, so state is bounded
     by open windows × types regardless of input size.
     """
-    import shutil
-
     from ..streaming.ingest import (
         as_event_time,
         run_stream_once,
-        stream_dir_for_file,
-        stream_events,
+        stream_events_table,
     )
 
     utc(spark)
-    batch = load_table(spark, sf_dir, "events")
-    src_dir = stream_dir_for_file(f"{sf_dir}/events.parquet")
-    src = stream_events(spark, src_dir, schema=batch.schema)
+    src = stream_events_table(spark, sf_dir)
     agg = (
         as_event_time(src)
         .withWatermark("ts", "1 hour")
@@ -1827,9 +1787,7 @@ def q_stream_hopping_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    out = run_stream_once(agg, "stream_hopping")
-    shutil.rmtree(src_dir, ignore_errors=True)
-    return out
+    return run_stream_once(agg, "stream_hopping")
 
 
 register(
@@ -1854,7 +1812,7 @@ register(
         SELECT window_start, event_type, cnt, sum_value
         FROM agg, wm WHERE window_start + INTERVAL 2 HOUR <= w
         """,
-        doc="live-engine hopping windows + watermark (availableNow); "
+        doc="live-engine hopping windows + watermark (drained); "
         "append emission at window_end <= final watermark",
     )
 )
@@ -1872,7 +1830,7 @@ def q_stream_chained_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cascade reduces to `outer_end <= final watermark` — the inner windows
     of a closed hour are all emitted (inner_end <= outer_end <= wm) and
     flow into the outer state store in the follow-up micro-batches that
-    availableNow schedules while eviction progresses.  Watermark
+    the drain schedules while eviction progresses.  Watermark
     conventions as pinned for stream_tumbling_counts: ms-floored max
     event time minus the 1 h delay, window-end INCLUSIVE eviction.
 
@@ -1882,25 +1840,18 @@ def q_stream_chained_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of one full-volume scan + shuffle per resolution (the batch
     ladder `multires_event_rollup` pays per level from parquet).
     """
-    import shutil
-
     from ..streaming.ingest import (
         chained_window_rollup,
         run_stream_once,
-        stream_dir_for_file,
-        stream_events,
+        stream_events_table,
     )
 
     utc(spark)
-    batch = load_table(spark, sf_dir, "events")
-    src_dir = stream_dir_for_file(f"{sf_dir}/events.parquet")
-    src = stream_events(spark, src_dir, schema=batch.schema)
-    out = run_stream_once(
+    src = stream_events_table(spark, sf_dir)
+    return run_stream_once(
         chained_window_rollup(src, "15 minutes", "1 hour", "1 hour"),
         "stream_chained",
     )
-    shutil.rmtree(src_dir, ignore_errors=True)
-    return out
 
 
 register(
@@ -1951,20 +1902,15 @@ def q_stream_join_hourly_conversions(
     minus the 2 h delay (the min-across-sides rule pinned for
     `stream_view_click_outer`).  The delay sum is exact bigint micros.
     """
-    import shutil
-
     from ..streaming.ingest import (
         joined_conversion_counts,
         run_stream_once,
-        stream_dir_for_file,
-        stream_events,
+        stream_events_table,
     )
 
     utc(spark)
-    batch = load_table(spark, sf_dir, "events")
-    src_dir = stream_dir_for_file(f"{sf_dir}/events.parquet")
-    src = stream_events(spark, src_dir, schema=batch.schema)
-    out = run_stream_once(
+    src = stream_events_table(spark, sf_dir)
+    return run_stream_once(
         joined_conversion_counts(
             src.filter(F.col("event_type") == "view"),
             src.filter(F.col("event_type") == "click"),
@@ -1974,8 +1920,6 @@ def q_stream_join_hourly_conversions(
         ),
         "stream_join_agg",
     )
-    shutil.rmtree(src_dir, ignore_errors=True)
-    return out
 
 
 register(
@@ -2030,8 +1974,9 @@ def q_stream_synthetic_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts, each micro-batch advances by 2,500 rows to 10,000, every
     batch fans out over 4 executor-side InputPartitions — aggregated in
     complete mode and drained through the real offset/commit protocol
-    (4 micro-batches; processAllAvailable, see run_synthetic_counts for
-    why not availableNow).
+    (4 micro-batches) by ``streaming/ingest.run_stream_once``, whose
+    foreachBatch sink overwrites on each batch so the result is the
+    last, full table.
 
     Every generated field is a pure function of the row id under the
     house portable-hash primes, so the DuckDB twin regenerates the
@@ -2192,7 +2137,7 @@ def q_stream_user_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     per user in the state store, Arrow batches folded in per
     micro-batch).
 
-    Single-file availableNow delivery ⇒ one data micro-batch, so the
+    Single-file delivery ⇒ one data micro-batch, so the
     update-mode emission is exactly one final profile per user — the
     batch-SQL twin.  The multi-batch running-update and both
     idle-timeout eviction modes (wall-clock and event-time tombstones)
@@ -2201,24 +2146,17 @@ def q_stream_user_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     it.  Timestamps fold to microseconds (ns // 1000), matching the
     oracle engine's timestamp precision exactly.
     """
-    import shutil
-
     from ..streaming.ingest import (
         run_stream_once,
         running_user_profiles,
-        stream_dir_for_file,
-        stream_events,
+        stream_events_table,
     )
 
     utc(spark)
-    batch = load_table(spark, sf_dir, "events")
-    src_dir = stream_dir_for_file(f"{sf_dir}/events.parquet")
-    src = stream_events(spark, src_dir, schema=batch.schema)
-    out = run_stream_once(
+    src = stream_events_table(spark, sf_dir)
+    return run_stream_once(
         running_user_profiles(src), "stream_profiles", output_mode="update"
-    )
-    shutil.rmtree(src_dir, ignore_errors=True)
-    return out.orderBy("user_id")
+    ).orderBy("user_id")
 
 
 register(
@@ -2236,7 +2174,7 @@ register(
         ORDER BY user_id
         """,
         doc="applyInPandasWithState running per-user profiles through the "
-        "live engine (single-batch availableNow); update emission == "
+        "live engine (single data batch); update emission == "
         "batch per-user aggregate",
     )
 )
@@ -2259,22 +2197,17 @@ def q_stream_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark, same eviction predicate pinned for stream_tumbling) so a
     batch join + windowed-agg SQL twin reproduces it exactly.
     """
-    import shutil
-
     from ..streaming.ingest import (
         as_event_time,
         run_stream_once,
-        stream_dir_for_file,
-        stream_events,
+        stream_events_table,
     )
 
     utc(spark)
-    batch = load_table(spark, sf_dir, "events")
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
-    src_dir = stream_dir_for_file(f"{sf_dir}/events.parquet")
-    src = stream_events(spark, src_dir, schema=batch.schema)
+    src = stream_events_table(spark, sf_dir)
     enriched = (
         as_event_time(src)
         .withWatermark("ts", "1 hour")
@@ -2295,9 +2228,7 @@ def q_stream_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    out = run_stream_once(agg, "stream_enrich")
-    shutil.rmtree(src_dir, ignore_errors=True)
-    return out
+    return run_stream_once(agg, "stream_enrich")
 
 
 register(
@@ -2369,19 +2300,10 @@ def q_stream_popularity_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     utc(spark)
     batch = load_table(spark, sf_dir, "events")
-    # scratch split (r16 ADVICE): ONLY the fsync-heavy checkpoint rides
-    # the ephemeral scratch base (tmpfs by default — every micro-batch
-    # fsyncs the offset WAL + one state delta per state partition there,
-    # the partition count sized from the event count below; the r16 #9
-    # win); the delivery halves (a full parquet copy of the event log)
-    # and the snapshot versions stay on the default temp dir so a larger
-    # SF or a memory-constrained host can't exhaust tmpfs on bulk data.  A
-    # production store belongs on durable storage ($SPARK_GRAFT_STREAM_CKPT
-    # overrides the scratch base).
-    from ..streaming.ingest import scratch_base
-
+    # all run scaffolding (delivery halves, checkpoint, snapshot versions)
+    # lives under one engine-temp dir, so one rmtree covers it on failure;
+    # a production store's checkpoint belongs on durable storage
     work = tempfile.mkdtemp(prefix="cwi_pop_store_")
-    ckpt_work = tempfile.mkdtemp(prefix="cwi_pop_ckpt_", dir=scratch_base())
     try:
         src_dir = os.path.join(work, "src")
         os.makedirs(src_dir)
@@ -2401,7 +2323,7 @@ def q_stream_popularity_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             os.link(pf, os.path.join(src_dir, f"{part}.parquet"))
         store = os.path.join(work, "store")
-        ckpt = os.path.join(ckpt_work, "ckpt")
+        ckpt = os.path.join(work, "ckpt")
         src = stream_events(spark, src_dir, schema=batch.schema)
         # state-store width from the event count (parquet footer, rows per
         # task — sizing.width_for_rows): every state partition commits a
@@ -2424,15 +2346,12 @@ def q_stream_popularity_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             if prev is not None:
                 spark.conf.set("spark.sql.shuffle.partitions", prev)
     except BaseException:
-        # a mid-run failure must not leak the scaffolding (the checkpoint
-        # sits in RAM-backed tmpfs until reboot otherwise)
+        # a mid-run failure must not leak the scaffolding
         shutil.rmtree(work, ignore_errors=True)
-        shutil.rmtree(ckpt_work, ignore_errors=True)
         raise
     # keep ONLY the published snapshot (|items| rows) the returned plan
     # reads from; the source halves / checkpoint / superseded versions
     # are run scaffolding
-    shutil.rmtree(ckpt_work, ignore_errors=True)
     cur = _store_dir(store)
     for entry in os.listdir(work):
         p = os.path.join(work, entry)

@@ -38,9 +38,11 @@ pushdown path by ::test_python_datasource_pushdown_prunes_rows.
 
 The module also carries the other two V2 surfaces: a partition-planned
 STREAMING reader (`SyntheticEventsDataSource`, under the driver hash
-gate via `stream_synthetic_counts`) and a transactional batch WRITER
-(`JsonlDataSource` — task-temp files promoted only by the driver-side
-commit; ::test_python_datasource_jsonl_writer_commit_protocol).
+gate via `stream_synthetic_counts` and drained by the package's one
+bounded-stream runner, streaming/ingest.run_stream_once) and a
+transactional batch WRITER (`JsonlDataSource` — task-temp files
+promoted only by the driver-side commit;
+::test_python_datasource_jsonl_writer_commit_protocol).
 """
 
 from __future__ import annotations
@@ -237,10 +239,10 @@ class SyntheticEventsStreamReader(DataSourceStreamReader):
     SimpleDataSourceStreamReader, rows are generated on EXECUTORS):
     offsets are row counts, each micro-batch advances by `rows_per_batch`
     up to `max_rows`, and every batch's row range splits into
-    `num_partitions` tasks.  Drive it with processAllAvailable (see
-    :func:`run_synthetic_counts`) — availableNow snapshots latestOffset
-    ONCE at query start, which collapses the offset progression to a
-    single rows_per_batch batch."""
+    `num_partitions` tasks.  Drain it with processAllAvailable
+    (streaming/ingest.run_stream_once), not availableNow: this reader
+    lacks native availableNow support, so Spark would wrap it and freeze
+    latestOffset after one call — a single rows_per_batch batch."""
 
     def __init__(self, options) -> None:
         self.max_rows = int(options.get("max_rows", "10000"))
@@ -311,22 +313,14 @@ class SyntheticEventsDataSource(DataSource):
 def run_synthetic_counts(spark, max_rows: int = 10_000,
                          rows_per_batch: int = 2_500,
                          num_partitions: int = 4):
-    """Drive the synthetic stream to completion and return per-type
-    (cnt, sum_cents) as a batch DataFrame — the driver-evidence bridge
-    for the custom STREAMING source (same role run_stream_once plays for
-    the file source).
-
-    Trigger choice: availableNow snapshots latestOffset ONCE at start,
-    which would collapse the offset progression this source exists to
-    demonstrate — so the runner uses processAllAvailable(): each
-    micro-batch planning call advances latestOffset by one quantum until
-    max_rows, the commit log catches up, latestOffset stops moving, and
-    the no-new-data latch releases — ceil(max_rows / rows_per_batch)
-    micro-batches through the REAL offset/commit protocol.
-    """
-    import uuid
-
+    """Per-type (cnt, sum_cents) of the synthetic stream, drained to
+    completion: ceil(max_rows / rows_per_batch) micro-batches through the
+    REAL offset/commit protocol, aggregated in complete mode by
+    streaming/ingest.run_stream_once (which also says why the drain is
+    processAllAvailable, not availableNow)."""
     from pyspark.sql import functions as F
+
+    from ..streaming.ingest import run_stream_once
 
     spark.dataSource.register(SyntheticEventsDataSource)
     src = (
@@ -344,23 +338,7 @@ def run_synthetic_counts(spark, max_rows: int = 10_000,
         .cast("bigint")
         .alias("sum_cents"),
     )
-    name = f"synth_{uuid.uuid4().hex}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination(60)
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name)
+    return run_stream_once(agg, "synth", output_mode="complete")
 
 
 # ---------------------------------------------------------------------------

@@ -77,11 +77,16 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy parquet scan of one harness table.
 
-    The `events` table carries TIMESTAMP(NANOS) which Spark's vectorized
-    reader rejects; we read nanos as int64 (legacy conf) and rebuild a
-    microsecond TimestampType column with integer `div` (no double
-    round-trip — ns epoch values exceed the 53-bit mantissa).  The conf
-    is set on every call: a read with a cached schema still needs it.
+    The harness `events` files (sf0.001/sf0.01/sf0.1 and perfbench's
+    generated tables) store ``ts`` as microsecond timestamps without a
+    zone, so it reads as TIMESTAMP_NTZ.  A file written with
+    TIMESTAMP(NANOS), which Spark's vectorized reader rejects, is read
+    with nanos as int64 (legacy conf) and ``ts`` rebuilt as a microsecond
+    TimestampType with integer `div` (no double round-trip — ns epoch
+    values exceed the 53-bit mantissa); only such nanosecond files take
+    that branch, and test_load_table_events_nanos_ts_stays_timestamp
+    pins it.  The conf is set on every call: a read with a cached schema
+    still needs it.
     """
     path = f"{sf_dir}/{name}.parquet"
     if name == "events":

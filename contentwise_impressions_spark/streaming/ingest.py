@@ -57,21 +57,18 @@ def tumbling_event_counts(
     )
 
 
-def incremental_toppop(
-    interactions: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
+def incremental_toppop(interactions: DataFrame) -> DataFrame:
     """Streaming item-popularity counts (the TopPop model, incrementally).
 
-    Complete-mode aggregation over item_id: each micro-batch updates the
-    popularity table; the serving layer reads the latest snapshot.  The agg
-    is partial-aggregable so state is one row per item.
+    One state row per item, partial-aggregated map-side; the serving store
+    (streaming/serving.py) and complete-mode readers take the latest
+    counts.  No watermark: the ``item_id`` key carries no event time, so a
+    watermark could neither evict state nor drop a row — it would only
+    schedule an idle no-data micro-batch after the last input.
     """
-    return (
-        as_event_time(interactions)
-        .withWatermark("ts", watermark)
-        .groupBy("item_id")
-        .agg(F.count("*").alias("popularity"))
-    )
+    return interactions.groupBy(
+        F.col("item_id").cast("bigint").alias("item_id")
+    ).agg(F.count("*").alias("popularity"))
 
 
 def stream_events(
@@ -85,156 +82,124 @@ def stream_events(
     return reader.load(source_dir)
 
 
-#: tmpfs checkpoint/output dirs created by run_stream_once in this
-#: process — re-swept on each call and at exit (see the
-#: maintenance-thread note; output dirs must additionally outlive the
-#: RETURNED DataFrame's consumption, so they are only swept on the NEXT
-#: run_stream_once call or at exit, never inside their own run)
+#: scratch dirs this process created for bounded streams, all under the
+#: engine temp dir (``TMPDIR``).  Checkpoints are removed at the end of
+#: their run and re-swept on each later run and at exit: the state-store
+#: maintenance thread can re-write snapshot files into a checkpoint AFTER
+#: its query stopped.  Output dirs feed the RETURNED DataFrame — a
+#: consumer may hold several results before collecting — so a successful
+#: run's output is swept only at exit (an emission is top-K/aggregate
+#: sized, not bulk data).  Source dirs (symlinks only) are reused by
+#: every run over the same table.
 _CKPT_DIRS: set[str] = set()
 _OUT_DIRS: set[str] = set()
-_CKPT_ATEXIT = False
+_SRC_DIRS: dict[tuple[str, int], str] = {}
+_SWEEP_REGISTERED = False
+
+#: state-store partitions of a bounded run.  A streaming query freezes
+#: the count into its checkpoint at first start; the session default
+#: (over-provisioned for batch AQE to coalesce) would pin dozens of tiny
+#: state tasks per micro-batch, and stateful queries run without AQE.
+STATE_PARTITIONS = 8
 
 
-def scratch_base() -> str | None:
-    """Base directory for EPHEMERAL streaming scratch (checkpoints, run
-    scaffolding): ``$SPARK_GRAFT_STREAM_CKPT`` override → tmpfs
-    (/dev/shm) → None (caller falls back to the engine temp dir).
+def _sweep_at_exit() -> None:
+    global _SWEEP_REGISTERED
+    if _SWEEP_REGISTERED:
+        return
+    import atexit
+    import shutil
 
-    Every micro-batch fsyncs the offset WAL, commit log, and per-
-    partition state deltas into the checkpoint, so tmpfs placement is
-    the r16 #9 win; a PRODUCTION stream's checkpoint is its recovery
-    contract and belongs on durable shared storage (set the env var)."""
-    import os
-
-    base = os.environ.get("SPARK_GRAFT_STREAM_CKPT")
-    # empty/whitespace values behave like unset: run_stream_once's
-    # `if base` treated "" as disabled while modelops' mkdtemp(dir="")
-    # silently landed in the CWD — normalize so every caller agrees
-    # (ADVICE r16)
-    if base is not None and not base.strip():
-        base = None
-    if base is None and os.access("/dev/shm", os.W_OK):
-        base = "/dev/shm"
-    return base
+    atexit.register(
+        lambda: [
+            shutil.rmtree(d, ignore_errors=True)
+            for d in (_CKPT_DIRS | _OUT_DIRS | set(_SRC_DIRS.values()))
+        ]
+    )
+    _SWEEP_REGISTERED = True
 
 
 def run_stream_once(
     stream_df: DataFrame,
     name_prefix: str = "stream_once",
-    shuffle_partitions: int | None = 8,
     output_mode: str = "append",
 ) -> DataFrame:
-    """Execute a streaming transformation to completion with an
-    ``availableNow`` trigger into a foreachBatch parquet sink and return
-    the emitted rows as a batch DataFrame.
+    """Run a streaming transformation until its input is drained and
+    return the emitted rows as a batch DataFrame — the one way this
+    package runs a bounded stream.
 
-    This is the driver-evidence bridge for the streaming family: the
-    REAL Structured Streaming engine runs (file source → watermark →
-    state store → append emission), then the emitted rows are handed
-    back as an ordinary DataFrame an external oracle can check.
-    ``availableNow`` processes every available input, then keeps running
-    micro-batches while the advancing watermark can still evict state
-    (shouldRunAnotherBatch), so the final emission reflects the
-    end-of-input watermark deterministically.
+    The REAL Structured Streaming engine runs (source → watermark →
+    state store → emission), each micro-batch's emission goes to an
+    ephemeral parquet directory through ``foreachBatch``, and the result
+    reads that directory back, so an external oracle can check it and
+    the emission never has to fit in driver memory.  ``append`` and
+    ``update`` modes append each batch's emission; ``complete`` mode
+    overwrites, so the directory holds the last full result table.
 
-    Sink choice (r17): each micro-batch's emission is APPENDED to an
-    ephemeral parquet directory by ``foreachBatch`` instead of collected
-    into the driver-memory sink.  Emitted ROWS are identical — in both
-    append and update mode the memory sink only ever accumulated each
-    batch's emission, which is exactly what parquet-append does (no
-    caller uses complete mode) — but the rows now stay executor-side:
-    the memory sink materializes the ENTIRE emission in driver memory,
-    which caps the bridge at driver heap (guide §5) exactly like the
-    driver-side collects the round-1 verdict flagged; a 100 TB stream's
-    dedup emission is the full event set.  Measured locally: a wash to
-    −6% per query (interleaved A/B, best-of-3 per arm) with much tighter
-    first-sample tails — the win is the scale contract, not the bench.
+    Drain: the default trigger plus ``processAllAvailable()``, which
+    returns once no new data is available AND no further batch is due —
+    the engine keeps scheduling no-data batches while the advancing
+    watermark can still evict state, so the emission reflects the
+    end-of-input watermark.  Not ``availableNow``: Spark wraps a source
+    without native support for it (such as a Python
+    ``DataSourceStreamReader``, sources/pyds.py) in a wrapper that
+    freezes ``latestOffset`` after one call, which would cut a
+    multi-batch source to its first batch.  Do not pass a stream with a
+    ProcessingTimeTimeout state function: the engine then schedules
+    no-data batches forever and ``processAllAvailable`` never returns
+    (see :func:`running_user_profiles`).
 
-    ``shuffle_partitions`` right-sizes the state-store partition count
-    for this EPHEMERAL run (a streaming query freezes the count into its
-    checkpoint at first start; the session default — over-provisioned
-    for batch AQE to coalesce — would pin dozens of tiny state tasks per
-    micro-batch, and stateful workloads disable AQE).  A long-lived
-    production stream should instead size it to its cluster and keep it
-    for the checkpoint's lifetime; pass None to inherit the session
-    setting.
-
-    Checkpoint placement (r16): every micro-batch fsyncs the offset WAL,
-    the commit log, and one state-store delta per partition into the
-    checkpoint directory.  For this run the checkpoint is scratch by
-    construction (fresh uuid-named query, never resumed, deleted on
-    completion), so it goes on tmpfs when available — interleaved A/B at
-    sf0.1 measured the stateful queries 28-32% faster warm
-    (stream_synthetic_counts 5.6→3.8 s, stream_popularity_store
-    5.9→4.0, stream_join_hourly_conversions 4.5→3.2) with emissions
-    byte-identical (checkpoint location does not participate in
-    results).  A PRODUCTION stream's checkpoint is its recovery
-    contract and belongs on durable shared storage — override with
-    ``$SPARK_GRAFT_STREAM_CKPT`` (any path, e.g. an HDFS/S3 URI in a
-    real deployment; unset → tmpfs → engine temp-dir fallback)."""
+    The run uses :data:`STATE_PARTITIONS` shuffle partitions and
+    restores the session setting afterwards.  Its checkpoint and output
+    dirs are fresh ``tempfile`` dirs under the engine temp dir; the
+    checkpoint is removed when the run ends, and on failure the output
+    dir too.  A production stream's checkpoint is its recovery contract
+    and belongs on durable storage (streaming/serving.py takes it as an
+    argument)."""
     import os
     import shutil
     import tempfile
     import uuid
 
     spark = stream_df.sparkSession
-    name = f"{name_prefix}_{uuid.uuid4().hex}"
     prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    base = scratch_base()
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name_prefix}_", dir=base) if base else None
-    out_dir = tempfile.mkdtemp(prefix=f"out_{name_prefix}_", dir=base)
-    # the state-store maintenance thread can re-write snapshot files into
-    # a checkpoint AFTER the query terminates and the in-run rmtree below
-    # has run — so every created dir is also re-swept on the next call
-    # and at interpreter exit (post SparkSession, nothing recreates it);
-    # tmpfs outlives the process, a silent leak would accumulate.  Output
-    # dirs feed the RETURNED DataFrame — a consumer may lawfully hold
-    # several results before collecting (the memory-sink views had that
-    # lifetime), so they are swept ONLY at interpreter exit; an emission
-    # is a top-K/aggregate-sized artifact (MBs), not bulk data.
+    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
+    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name_prefix}_")
+    out_dir = tempfile.mkdtemp(prefix=f"out_{name_prefix}_")
     for old in list(_CKPT_DIRS):
-        if old != ckpt:
-            shutil.rmtree(old, ignore_errors=True)
-            if not os.path.exists(old):
-                _CKPT_DIRS.discard(old)
-    if ckpt is not None:
-        _CKPT_DIRS.add(ckpt)
+        shutil.rmtree(old, ignore_errors=True)
+        if not os.path.exists(old):
+            _CKPT_DIRS.discard(old)
+    _CKPT_DIRS.add(ckpt)
     _OUT_DIRS.add(out_dir)
-    global _CKPT_ATEXIT
-    if not _CKPT_ATEXIT:
-        import atexit
-
-        atexit.register(
-            lambda: [
-                shutil.rmtree(d, ignore_errors=True)
-                for d in (_CKPT_DIRS | _OUT_DIRS)
-            ]
-        )
-        _CKPT_ATEXIT = True
+    _sweep_at_exit()
+    write_mode = "overwrite" if output_mode == "complete" else "append"
 
     def _sink(bdf, _bid) -> None:
         # runs on the DRIVER once per micro-batch; the write itself is an
         # ordinary executor-parallel parquet job
-        bdf.write.mode("append").parquet(out_dir)
+        bdf.write.mode(write_mode).parquet(out_dir)
 
     try:
-        writer = (
+        q = (
             stream_df.writeStream.foreachBatch(_sink)
-            .queryName(name)
+            .queryName(f"{name_prefix}_{uuid.uuid4().hex}")
             .outputMode(output_mode)
-            .trigger(availableNow=True)
+            .option("checkpointLocation", ckpt)
+            .start()
         )
-        if ckpt is not None:
-            writer = writer.option("checkpointLocation", ckpt)
-        q = writer.start()
-        q.awaitTermination()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    except BaseException:
+        shutil.rmtree(out_dir, ignore_errors=True)
+        _OUT_DIRS.discard(out_dir)
+        raise
     finally:
-        if shuffle_partitions is not None and prev is not None:
+        if prev is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if ckpt is not None:
-            shutil.rmtree(ckpt, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
     # explicit schema: an emission can be empty (zero part files), and
     # the caller's downstream plan needs the stream's exact columns
     return spark.read.schema(stream_df.schema).parquet(out_dir)
@@ -259,6 +224,28 @@ def stream_dir_for_file(path: str, copies: int = 1) -> str:
         name = base if i == 0 else f"redelivery{i}_{base}"
         os.symlink(os.path.abspath(path), os.path.join(d, name))
     return d
+
+
+def stream_events_table(
+    spark: SparkSession, sf_dir: str, copies: int = 1
+) -> DataFrame:
+    """File-source stream over the ``events`` table of ``sf_dir``, each
+    link one micro-batch (:func:`stream_dir_for_file`; ``copies`` > 1
+    redelivers every row).  The symlink dir is made once per (file,
+    copies) per process and swept at exit, so a run — failed or not —
+    leaves nothing behind; the schema is ``load_table``'s, so the stream
+    reads ``ts`` exactly as the batch table does."""
+    import os
+
+    from ..sources.tables import load_table
+
+    path = os.path.realpath(os.path.join(sf_dir, "events.parquet"))
+    src_dir = _SRC_DIRS.get((path, copies))
+    if src_dir is None or not os.path.isdir(src_dir):
+        src_dir = _SRC_DIRS[(path, copies)] = stream_dir_for_file(path, copies)
+        _sweep_at_exit()
+    schema = load_table(spark, sf_dir, "events").schema
+    return stream_events(spark, src_dir, schema=schema)
 
 
 def sessionize_events(
@@ -605,7 +592,7 @@ def chained_window_rollup(
     once `watermark >= outer_end`.  With aligned durations
     (outer % inner == 0) the last inner window of an outer window ends
     exactly at outer_end, so both predicates reduce to
-    `outer_end <= final watermark` — the SQL-twin cutoff.  availableNow
+    `outer_end <= final watermark` — the SQL-twin cutoff.  The drain
     keeps scheduling micro-batches while eviction can still progress
     (shouldRunAnotherBatch), so the cascade completes within one run.
 

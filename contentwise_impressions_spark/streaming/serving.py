@@ -20,10 +20,11 @@ Pattern notes (the three standard choices, and why this one):
   table format handles atomicity.  Not available in this container.
 - complete-mode memory sink — test-only.
 
-The aggregation takes no watermark: its key (``item_id``) has no
-event-time column, so a watermark can neither evict state nor drop a
-row.  It would only make the engine schedule a no-data micro-batch after
-the last input, which rewrites an identical snapshot.
+The aggregation is streaming/ingest.incremental_toppop, the one TopPop
+streaming definition.  It takes no watermark: its key (``item_id``) has
+no event-time column, so a watermark could neither evict state nor drop
+a row; it would only schedule a no-data micro-batch after the last
+input, which rewrites an identical snapshot.
 
 At 100 TB of events the maintained table is still |items| rows — the
 whole point of pushing the aggregation into the stream instead of
@@ -36,7 +37,8 @@ import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from .ingest import incremental_toppop
 
 _PTR = "CURRENT"
 
@@ -83,9 +85,7 @@ def maintain_popularity_store(
     """
     os.makedirs(store_path, exist_ok=True)
 
-    agg = interactions.groupBy(
-        F.col("item_id").cast("bigint").alias("item_id")
-    ).agg(F.count("*").alias("popularity"))
+    agg = incremental_toppop(interactions)
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession

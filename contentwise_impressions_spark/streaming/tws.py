@@ -54,7 +54,7 @@ def user_type_ledger(events: DataFrame) -> DataFrame:
     ``transformWithStateInPandas`` + MapState — the TWS twin of the
     `applyInPandasWithState` fold in `streaming/ingest.py` (same
     semantics as the batch GROUP BY user_id, event_type under
-    single-delivery availableNow).
+    single-delivery run_stream_once).
 
     Each input micro-batch updates the user's MapState entries
     (event_type → (cnt, sum_value, last_us)) and emits a full snapshot
@@ -125,8 +125,8 @@ def user_type_ledger(events: DataFrame) -> DataFrame:
 
 
 def run_ledger_once(events_stream: DataFrame) -> DataFrame:
-    """Execute :func:`user_type_ledger` to completion under availableNow
-    with the RocksDB provider pinned for the run (TWS refuses the default
+    """Drain :func:`user_type_ledger` through ``run_stream_once`` with
+    the RocksDB provider pinned for the run (TWS refuses the default
     HDFS-backed provider), returning the snapshot with a rehydrated
     timestamp column."""
     from .ingest import run_stream_once

@@ -471,3 +471,26 @@ def test_query_layers_read_base_tables_through_load_table():
         if direct.search(line)
     ]
     assert hits == [], hits
+
+
+def test_bounded_streams_run_through_run_stream_once():
+    """Only the streaming bridge (``streaming/ingest.py``, home of
+    ``run_stream_once``) and the serving store (``streaming/serving.py``)
+    start streams, and the package never uses the memory sink (it keeps
+    the whole emission in driver memory; test-only)."""
+    import re
+
+    import contentwise_impressions_spark as pkg
+
+    root = Path(pkg.__file__).resolve().parent
+    bridge = {Path("streaming/ingest.py"), Path("streaming/serving.py")}
+    memory = re.compile(r"""format\(\s*["']memory["']\s*\)""")
+    starts, sinks = [], []
+    for p in sorted(root.rglob("*.py")):
+        rel = p.relative_to(root)
+        for i, line in enumerate(p.read_text().splitlines(), 1):
+            if ".writeStream" in line and rel not in bridge:
+                starts.append(f"{rel}:{i}")
+            if memory.search(line):
+                sinks.append(f"{rel}:{i}")
+    assert starts == [] and sinks == [], (starts, sinks)

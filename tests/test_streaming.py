@@ -7,6 +7,8 @@ import shutil
 import tempfile
 from pathlib import Path
 
+import pytest
+
 from contentwise_impressions_spark.sources.tables import load_table
 from contentwise_impressions_spark.streaming.ingest import (
     stream_events,
@@ -934,3 +936,82 @@ def test_availablenow_join_agg_watermark_boundary(spark):
     assert run_case("2024-01-01 04:00:00.001") == ["2024-01-01 00:00:00"]
     assert run_case("2024-01-01 04:00:00") == []
     assert run_case("2024-01-01 03:59:59.999") == []
+
+
+def test_run_stream_once_complete_mode_keeps_last_table(spark, tmp_path):
+    """Complete mode overwrites the sink on every micro-batch: a two-file
+    source (two batches) returns each key once, with its final count.
+    An appending sink would also hold batch 1's table."""
+    from contentwise_impressions_spark.streaming.ingest import (
+        run_stream_once,
+        stream_events,
+    )
+
+    for rows in ([(1,), (1,), (2,)], [(1,), (3,)]):
+        spark.createDataFrame(rows, "k long").coalesce(1).write.mode(
+            "append"
+        ).parquet(str(tmp_path / "in"))
+    src = stream_events(spark, str(tmp_path / "in"), schema="k long")
+    out = run_stream_once(
+        src.groupBy("k").count(), "complete_mode", output_mode="complete"
+    )
+    got = sorted((r["k"], r["count"]) for r in out.collect())
+    assert got == [(1, 3), (2, 1), (3, 1)]
+
+
+def test_synthetic_counts_leave_no_temp_view_or_active_stream(spark, sf_dir):
+    """The synthetic stream drains through run_stream_once: repeated runs
+    register no temporary view and leave no stream running."""
+    from contentwise_impressions_spark.plans.registry import all_queries
+
+    def temp_views() -> set:
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    views0 = temp_views()
+    for _ in range(2):
+        rows = all_queries()["stream_synthetic_counts"](spark, sf_dir).collect()
+        assert sum(r["cnt"] for r in rows) == 10_000
+    assert temp_views() == views0
+    assert spark.streams.active == []
+
+
+def test_run_stream_once_failure_leaves_no_scratch(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A stream whose batch raises: the error reaches the caller, no
+    stream stays active, the session's shuffle width comes back, and the
+    run's checkpoint and output dirs are gone — the engine temp dir keeps
+    only the cached events source dir, however many runs fail."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from contentwise_impressions_spark.streaming import ingest
+
+    tables = tmp_path / "tables"
+    tables.mkdir()
+    shutil.copy(os.path.join(sf_dir, "events.parquet"), tables)
+    scratch = tmp_path / "scratch"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+
+    @F.udf("long")
+    def boom(x):
+        raise ValueError("boom in batch")
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "5")
+    try:
+        for _ in range(2):
+            src = ingest.stream_events_table(spark, str(tables))
+            with pytest.raises(Exception, match="boom in batch"):
+                ingest.run_stream_once(
+                    src.select(boom("event_id").alias("x")), "failing"
+                )
+            assert spark.streams.active == []
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "5"
+            assert not [d for d in os.listdir(scratch) if d.startswith("ckpt_")]
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    (left,) = os.listdir(scratch)
+    assert left.startswith("stream_src_")
