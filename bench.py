@@ -7,7 +7,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 from pathlib import Path
 
@@ -76,6 +78,59 @@ def _round() -> tuple[Path, str]:
     return here, rnd
 
 
+def _codegen_compiles(spark) -> int:
+    """Classes Janino has compiled in this JVM so far: Spark's own
+    ``CodegenMetrics`` counter, one tick per generated-class cache miss."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
+def _run_timed(query, spark, sf_dir: str) -> tuple[float, int]:
+    """Build ``query`` and execute it into the noop sink, which runs the
+    full plan and materializes every column (count() would let Catalyst
+    prune computed columns).  Returns its seconds and the generated
+    classes compiled meanwhile; the counter is read outside the timed
+    span."""
+    c0 = _codegen_compiles(spark)
+    t0 = time.perf_counter()
+    query(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    secs = time.perf_counter() - t0
+    return secs, _codegen_compiles(spark) - c0
+
+
+def _stream_warmup(spark) -> None:
+    """Start and drain one trivial stateful stream.  The FIRST streaming
+    query of a session pays ~30 s of engine + state-store-provider
+    initialization (r10 verdict: stream_popularity_store 36.7 s in-suite
+    vs 5.1 s warm best-of-3), so doing it up front keeps the stream_*
+    per-query lines at steady-state engine cost.  Its source, checkpoint
+    and output dirs all live in one temp dir that is removed on the way
+    out, failed or not."""
+    from pyspark.sql import functions as F
+
+    from contentwise_impressions_spark.streaming.ingest import run_stream_once
+
+    wdir = tempfile.mkdtemp(prefix="bench_stream_warmup_")
+    prev_tmp, tempfile.tempdir = tempfile.tempdir, wdir
+    try:
+        src = os.path.join(wdir, "src")
+        spark.range(8).select(
+            F.timestamp_seconds(F.col("id") * 60).alias("ts"),
+            (F.col("id") % 2).alias("k"),
+        ).write.parquet(src)
+        warm_stream = (
+            spark.readStream.schema("ts timestamp, k bigint")
+            .parquet(src)
+            .withWatermark("ts", "1 minute")
+            .groupBy(F.window("ts", "2 minutes"), "k")
+            .count()
+        )
+        run_stream_once(warm_stream, name_prefix="bench_stream_warmup").count()
+    finally:
+        tempfile.tempdir = prev_tmp
+        shutil.rmtree(wdir, ignore_errors=True)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
@@ -131,38 +186,17 @@ def main() -> None:
     warmups = bench_warmups()
     warmup_timings: dict[str, float] = {}
     slow_best_of_3: dict[str, float] = {}
+    # generated classes each in-suite run compiled (codegen cache misses),
+    # so a compile-count regression localizes to its query
+    codegen: dict[str, int] = {}
+    compiles0 = _codegen_compiles(spark)
     t_reruns = 0.0
     t_all = time.perf_counter()
     ticks0 = _cpu_ticks()
 
-    # streaming family-warmup: the FIRST streaming query of a session pays
-    # ~30 s of engine + state-store-provider initialization (r10 verdict:
-    # stream_popularity_store 36.7 s in-suite vs 5.1 s warm best-of-3) —
-    # start and drain one trivial stateful query up front so
-    # the stream_* per-query lines reflect steady-state engine cost
     t0 = time.perf_counter()
     try:
-        import tempfile
-
-        from pyspark.sql import functions as F
-
-        from contentwise_impressions_spark.streaming.ingest import (
-            run_stream_once,
-        )
-
-        wdir = tempfile.mkdtemp(prefix="bench_stream_warmup_")
-        spark.range(8).select(
-            F.timestamp_seconds(F.col("id") * 60).alias("ts"),
-            (F.col("id") % 2).alias("k"),
-        ).write.mode("overwrite").parquet(wdir)
-        warm_stream = (
-            spark.readStream.schema("ts timestamp, k bigint")
-            .parquet(wdir)
-            .withWatermark("ts", "1 minute")
-            .groupBy(F.window("ts", "2 minutes"), "k")
-            .count()
-        )
-        run_stream_once(warm_stream, name_prefix="bench_stream_warmup").count()
+        _stream_warmup(spark)
         warmup_timings["streaming"] = round(time.perf_counter() - t0, 4)
     except Exception as exc:
         errors["warmup:streaming"] = f"{type(exc).__name__}: {exc}"[:500]
@@ -180,13 +214,9 @@ def main() -> None:
                 errors[f"warmup:{wkey}"] = f"{type(exc).__name__}: {exc}"[:500]
         fam_names = sorted(n for n in queries if families.get(n, "misc") == fam)
         for name in fam_names:
-            t0 = time.perf_counter()
             try:
-                df = queries[name](spark, sf_dir)
-                # noop sink executes the full plan and materializes every
-                # column (count() would let Catalyst prune computed columns).
-                df.write.format("noop").mode("overwrite").save()
-                timings[name] = round(time.perf_counter() - t0, 4)
+                secs, codegen[name] = _run_timed(queries[name], spark, sf_dir)
+                timings[name] = round(secs, 4)
             except Exception as exc:  # one broken query must not erase the round
                 errors[name] = f"{type(exc).__name__}: {exc}"[:500]
         # slow-query pinning: re-run >SLOW_RERUN_SEC queries twice more
@@ -201,12 +231,9 @@ def main() -> None:
             t_r = time.perf_counter()
             best = timings[name]
             for _ in range(2):
-                t0 = time.perf_counter()
                 try:
-                    queries[name](spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    best = min(best, time.perf_counter() - t0)
+                    secs, _ = _run_timed(queries[name], spark, sf_dir)
+                    best = min(best, secs)
                 except Exception as exc:
                     # a failed rerun must not silently pass the in-suite
                     # sample off as a verified warm best — record it
@@ -219,6 +246,9 @@ def main() -> None:
         release_session_payloads(spark)
 
     total = round(time.perf_counter() - t_all - t_reruns, 4)
+    # every class compiled from the streaming warmup to the last family,
+    # family warmups and slow-query re-runs included
+    codegen_total = _codegen_compiles(spark) - compiles0
     cpu = _cpu_share(ticks0, _cpu_ticks())
 
     # derived throughput for the baseline comparison: the reference's
@@ -245,11 +275,8 @@ def main() -> None:
             # least-disturbed sample is the comparable one.  The in-suite
             # timing above stays as-measured for wall-clock honesty.
             for _ in range(2):
-                t0 = time.perf_counter()
-                queries["toppop_eval_metrics"](spark, sf_dir).write.format(
-                    "noop"
-                ).mode("overwrite").save()
-                eval_sec = min(eval_sec, time.perf_counter() - t0)
+                secs, _ = _run_timed(queries["toppop_eval_metrics"], spark, sf_dir)
+                eval_sec = min(eval_sec, secs)
             n_users = (
                 spark.read.parquet(f"{sf_dir}/events.parquet")
                 .select("user_id")
@@ -296,6 +323,8 @@ def main() -> None:
         "value": total if valid else round(sum(timings.values()), 4),
         "unit": "sec",
         "queries": timings,
+        "codegen_compiles": codegen,
+        "codegen_compiles_total": codegen_total,
         "sf": sf,
         "valid": valid,
         **extras,

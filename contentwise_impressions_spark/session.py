@@ -14,6 +14,11 @@ import os
 from pyspark.sql import SparkSession
 
 
+#: entries of Spark's generated-class cache (``spark.sql.codegen.cache.
+#: maxEntries``); see the note at its ``.config`` line in :func:`get_spark`
+CODEGEN_CACHE_ENTRIES = 4096
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -71,6 +76,25 @@ def get_spark(
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")
+        # Catalyst compiles a Java class with Janino for every whole-stage
+        # codegen subtree and generated projection, predicate and ordering,
+        # and keeps them in ONE JVM-wide LRU cache.  Spark's default of 100
+        # entries is smaller than the cyclic working set of a repeated query
+        # mix (~16 classes per query), so an LRU that size misses on every
+        # access and every warm query recompiles what it compiled the last
+        # time.  Sized from a measurement: one session ran every
+        # bench_queries() entry at sf0.001 twice with the cache unbounded
+        # and counted CodegenMetrics.METRIC_COMPILATION_TIME.  The cold
+        # pass compiled 3,399 classes, the second 264 (plans whose source
+        # differs per run), so ~3,140 recur; 4096 is the next power of two
+        # and holds even the whole cold pass with 20% to spare.  At 100
+        # the same passes compiled 4,980 and 4,965 classes, and the warm
+        # pass took 136 s against 108 s (4 cores).  Cost: driver Metaspace
+        # after the two passes was 231 MB against 208 MB at 100 — evicted
+        # classes were not being unloaded anyway.  The conf is static: the cache
+        # is created once per JVM, so only a session built here gets it;
+        # getOrCreate on an existing session ignores it.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

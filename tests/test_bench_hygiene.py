@@ -12,7 +12,12 @@ these tests pin that the release (a) actually empties every cache layer and
 
 from __future__ import annotations
 
+import json
+import os
+import tempfile
 import time
+
+import bench
 
 from contentwise_impressions_spark.plans import shared
 from contentwise_impressions_spark.plans.registry import all_queries
@@ -267,3 +272,88 @@ def test_ivf_sq8_keyed_calls_share_one_persisted_copy(spark):
         assert _jvm_persistent_rdd_count(spark) == 0
         assert rows(build(f"{fn.__name__}-rebuilt")) == first
         release_session_payloads(spark, blocking=True)
+
+
+def test_stream_warmup_leaves_no_scratch(spark, tmp_path, monkeypatch):
+    """bench.py's streaming warmup drains its stream and removes every dir
+    it made (source, checkpoint and output), and puts the engine temp dir
+    setting back."""
+    scratch = tmp_path / "scratch"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    bench._stream_warmup(spark)
+    assert spark.streams.active == []
+    assert tempfile.tempdir == str(scratch)
+    assert os.listdir(scratch) == []
+
+
+#: analyst_queries ops that compiled nothing on any of 10 warm re-runs at
+#: sf0.001 (two sessions, five each).  A cold pass over them compiles ~190
+#: generated classes, more than Spark's default 100-entry cache holds.
+#: Ops whose AQE plan can number its codegen stages differently per run
+#: (countmin_heavy_hitters, hll_distinct_sketch, item_pmi_topk, kcore_filter,
+#: split_sizes, user_survival_curve) are left out.
+WARM_OPS = (
+    "click_attribution",
+    "click_position_heatmap",
+    "conversion_funnel",
+    "daily_value_gapfill",
+    "decayed_toppop",
+    "event_transition_matrix",
+    "multi_touch_attribution",
+    "user_activity_deciles",
+    "user_activity_gini",
+    "user_retention_cohorts",
+)
+
+
+def test_warm_queries_compile_nothing(spark, sf_dir):
+    """A query mix that repeats in a session compiles nothing the second
+    time: the generated-class cache holds the mix's working set.  With
+    Spark's 100-entry default the LRU is smaller than the cycle, so every
+    repeat recompiles every class."""
+    from contentwise_impressions_spark.session import CODEGEN_CACHE_ENTRIES
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_ENTRIES
+    )
+    qs = all_queries()
+    for name in WARM_OPS:
+        bench._run_timed(qs[name], spark, sf_dir)
+    warm = {name: bench._run_timed(qs[name], spark, sf_dir)[1] for name in WARM_OPS}
+    assert not any(warm.values()), warm
+
+
+def test_bench_artifact_records_codegen_compiles(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The artifact carries each in-suite query's compile delta next to
+    ``queries`` and the suite total as a top-level key.  Two stub queries
+    stand in for the suite and a Python counter for Spark's."""
+    counter = {"n": 0}
+
+    def stub(bump: int):
+        def query(s, _sf_dir):
+            counter["n"] += bump
+            return s.range(1)
+
+        return query
+
+    monkeypatch.setattr(
+        bench, "bench_queries", lambda: {"q_a": stub(3), "q_b": stub(5)}
+    )
+    monkeypatch.setattr(bench, "bench_query_families", lambda: {})
+    monkeypatch.setattr(bench, "bench_warmups", lambda: {})
+    monkeypatch.setattr(bench, "_stream_warmup", lambda s: None)
+    monkeypatch.setattr(bench, "_codegen_compiles", lambda s: counter["n"])
+    monkeypatch.setattr(bench, "_round", lambda: (tmp_path, "1"))
+    monkeypatch.setattr(bench, "get_spark", lambda app_name: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
+    bench.main()
+    art = json.loads((tmp_path / "BENCH_full_r01.json").read_text())
+    assert set(art["queries"]) == {"q_a", "q_b"}
+    assert art["codegen_compiles"] == {"q_a": 3, "q_b": 5}
+    assert art["codegen_compiles_total"] == 8
+    keys = list(art)
+    assert keys.index("codegen_compiles") == keys.index("queries") + 1
